@@ -25,8 +25,7 @@ def entry(spark: SparkSession) -> DataFrame:
     from pyspark.sql import types as T
 
     from archvisier_spark.kernel.cascade import extract_info_from_text
-    from archvisier_spark.kernel.naming import filename_for
-    from archvisier_spark.pipeline.extract import SPAN_TYPE, info_spans
+    from archvisier_spark.pipeline.extract import SPAN_TYPE, info_spans, new_name_col
     from archvisier_spark.pipeline.numbering import (
         with_sequence,
         with_sequence_sorted,
@@ -93,28 +92,7 @@ def entry(spark: SparkSession) -> DataFrame:
             out_col="lp",
         )
 
-    @F.pandas_udf("string")
-    def name_udf(lp, syg, num, nad, typ, wsp):
-        return pd.Series(
-            [
-                filename_for(
-                    {
-                        "sygnatura_sprawy": s,
-                        "numer_dokumentu": n,
-                        "nadawca_odbiorca": na,
-                        "typ_dokumentu": t,
-                        "w_sprawie": w,
-                    },
-                    int(i),
-                )
-                for i, s, n, na, t, w in zip(lp, syg, num, nad, typ, wsp)
-            ]
-        )
-
-    return numbered.withColumn(
-        "new_name",
-        name_udf("lp", "sygnatura_sprawy", "numer_dokumentu", "nadawca_odbiorca", "typ_dokumentu", "w_sprawie"),
-    ).drop("work_mode")
+    return numbered.withColumn("new_name", new_name_col()).drop("work_mode")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -88,6 +88,10 @@ def main(argv: list[str] | None = None) -> int:
     )
 
     spark = get_spark(master=args.master, app_name="archvisier_extract")
+    # job ids are sequential per context and the tracker keeps the newest,
+    # so the id span counts this invocation's jobs past the retention limit
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(), default=-1)
     docs = (
         corpus_df(spark, args.synthesize, skew_every=100, skew_factor=500)
         if args.synthesize
@@ -137,6 +141,7 @@ def main(argv: list[str] | None = None) -> int:
 
     lineage = lineage_report(spark, args.checkpoint)
     report["lineage_docs"] = lineage.groupBy().sum("n_docs").collect()[0][0]
+    report["spark_jobs"] = max(tracker.getJobIdsForGroup(), default=-1) - last_job
     print(json.dumps(report))
     spark.stop()
     return 0

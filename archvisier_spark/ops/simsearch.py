@@ -13,6 +13,7 @@ runs in whole-stage codegen (SURVEY.md §2.4 K2 — "no UDF needed").
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -78,7 +79,11 @@ def _lit_vec(vec: list[float]) -> "F.Column":
     query BUILD time (r07).  ``repr(float)`` is the shortest round-trip
     decimal and ``CAST('…' AS DOUBLE)`` parses back to the identical
     bits, so the resulting literals — and every downstream cosine — are
-    unchanged."""
+    unchanged.  A non-finite component raises ``ValueError``: Spark would
+    cast its spelling to NULL and null every cosine it touches."""
+    for i, v in enumerate(vec):
+        if not math.isfinite(v):
+            raise ValueError(f"vector component {i} is {v!r}, not finite")
     return F.expr(
         "array(" + ",".join(f"CAST('{v!r}' AS DOUBLE)" for v in vec) + ")"
     )

@@ -235,6 +235,7 @@ def q_counter_display(spark, sf_dir):
     (pipeline.numbering.with_sequence — no single-task global sort)
     partitioned by (mode, year); this oracle proves it row-for-row equal
     to a plain windowed row_number."""
+    from archvisier_spark.pipeline.extract import display_number_col
     from archvisier_spark.pipeline.numbering import with_sequence
 
     orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 2000)
@@ -249,10 +250,7 @@ def q_counter_display(spark, sf_dir):
         "o_orderkey",
         "yr",
         "lp_year",
-        F.concat(
-            F.lit("KP/"), F.col("lp_year").cast("string"),
-            F.lit("/"), F.col("yr").cast("string"),
-        ).alias("display_number"),
+        display_number_col("KP", "yr").alias("display_number"),
     )
 
 

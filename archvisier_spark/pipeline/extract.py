@@ -21,7 +21,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from archvisier_spark.kernel.cascade import extract_info_from_text
 from archvisier_spark.kernel.document import extract_document_text
@@ -458,13 +458,18 @@ def with_display_numbers(
         out_col="lp_year",
         keys_df=keys,
     )
+    return numbered.withColumn(out_col, display_number_col(work_mode)).drop("__year")
+
+
+def display_number_col(work_mode: str, year_col: str = "__year") -> Column:
+    """The TYPE_PATTERNS display string (``KP/{num}/{year}`` /
+    ``SA{num}_{year}``) from the ``lp_year`` and year columns, as JVM
+    expressions (no UDF)."""
     num_s = F.col("lp_year").cast("string")
-    year_s = F.col("__year").cast("string")
+    year_s = F.col(year_col).cast("string")
     if work_mode == "SA":
-        disp = F.concat(F.lit("SA"), num_s, F.lit("_"), year_s)
-    else:
-        disp = F.concat(F.lit(f"{work_mode}/"), num_s, F.lit("/"), year_s)
-    return numbered.withColumn(out_col, disp).drop("__year")
+        return F.concat(F.lit("SA"), num_s, F.lit("_"), year_s)
+    return F.concat(F.lit(f"{work_mode}/"), num_s, F.lit("/"), year_s)
 
 
 def with_new_names(
@@ -513,6 +518,13 @@ def with_new_names(
             keys_df=keys,
         )
 
+    return numbered.withColumn("new_name", new_name_col())
+
+
+def new_name_col() -> Column:
+    """``new_name`` (X14) from ``lp`` and the extracted fields: the kernel's
+    pure ``filename_for`` in an Arrow-batched pandas UDF."""
+
     @F.pandas_udf(T.StringType())
     def name_udf(
         lp: pd.Series,
@@ -538,7 +550,5 @@ def with_new_names(
             ]
         )
 
-    return numbered.withColumn(
-        "new_name",
-        name_udf("lp", "sygnatura_sprawy", "numer_dokumentu", "nadawca_odbiorca", "typ_dokumentu", "w_sprawie"),
-    )
+    return name_udf("lp", "sygnatura_sprawy", "numer_dokumentu",
+                    "nadawca_odbiorca", "typ_dokumentu", "w_sprawie")

@@ -19,20 +19,29 @@ S10); at 10^12 documents the equivalent is range-level bookkeeping:
   (bit_xor of xxhash64(url, extracted_text)) — enough to audit that a resumed
   run reproduced exactly the bytes a single-shot run would have.
 
+The checkpoint is read once per :func:`run_resumable` call: one collect
+of ``(chunk_id, status, run_id)`` yields both the done set and the next
+run id.
+
 Numbering (``lp``/``new_name``) is global across chunks, so it is applied
 by :func:`finalize_names` once all chunks are complete — it is a pure
 function of the completed output (url order), so it never blocks resume.
+``lp`` and the year-scoped ``lp_year`` come from one numbering pass.
 """
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from archvisier_spark.pipeline.extract import (
+    display_number_col,
     extract_documents,
+    new_name_col,
     with_display_numbers,
     with_new_names,
 )
+from archvisier_spark.pipeline.numbering import with_sequences
 
 DEFAULT_CHUNKS = 64
 STATUS_OK = "ok"
@@ -54,30 +63,28 @@ def _read_checkpoint(spark: SparkSession, checkpoint_path: str) -> DataFrame:
     return lin.withColumn("run_id", F.coalesce(F.col("run_id"), F.lit(-1)))
 
 
-def _next_run_id(spark: SparkSession, checkpoint_path: str) -> int:
-    """Monotonic run counter derived from the checkpoint itself — the
-    lineage analog of an Iceberg snapshot id, so "latest row per chunk"
-    means recency, not max-docs."""
+def _checkpoint_state(spark: SparkSession, checkpoint_path: str) -> tuple[set[int], int]:
+    """``(done chunk ids, next run id)`` from ONE read of the checkpoint.
+
+    The run id is a monotonic counter derived from the checkpoint itself —
+    the lineage analog of an Iceberg snapshot id, so "latest row per
+    chunk" means recency, not max-docs.  The collect is one row per chunk
+    per run: tiny by design.  A missing checkpoint means nothing is done."""
     try:
-        prev = _read_checkpoint(spark, checkpoint_path).agg(F.max("run_id")).collect()[0][0]
-    except Exception:
-        return 0
-    return (prev if prev is not None else -1) + 1
+        rows = (
+            _read_checkpoint(spark, checkpoint_path)
+            .select("chunk_id", "status", "run_id")
+            .collect()
+        )
+    except AnalysisException:
+        return set(), 0
+    done = {r["chunk_id"] for r in rows if r["status"] == STATUS_OK}
+    return done, max((r["run_id"] for r in rows), default=-1) + 1
 
 
 def completed_chunks(spark: SparkSession, checkpoint_path: str) -> set[int]:
     """Chunk ids with an ``ok`` lineage row (empty checkpoint → none)."""
-    try:
-        rows = (
-            _read_checkpoint(spark, checkpoint_path)
-            .filter(F.col("status") == STATUS_OK)
-            .select("chunk_id")
-            .distinct()
-            .collect()
-        )
-    except Exception:
-        return set()
-    return {r["chunk_id"] for r in rows}
+    return _checkpoint_state(spark, checkpoint_path)[0]
 
 
 def run_resumable(
@@ -98,8 +105,7 @@ def run_resumable(
     Safe to re-run after any failure: finished chunks are skipped via the
     lineage table, half-written chunks are overwritten whole.
     """
-    done = completed_chunks(spark, checkpoint_path)
-    run_id = _next_run_id(spark, checkpoint_path)
+    done, run_id = _checkpoint_state(spark, checkpoint_path)
     todo = sorted(set(range(n_chunks)) - done)
     if max_chunks_per_run is not None:
         todo = todo[:max_chunks_per_run]
@@ -159,11 +165,23 @@ def finalize_names(
     url sort order) — numbering then takes the zero-payload-shuffle path
     (pipeline/numbering.with_sequence_sorted); raises ``ValueError`` if
     the claimed order doesn't hold."""
-    named = with_new_names(
-        spark.read.parquet(output_path).drop("chunk_id"), work_mode=work_mode,
-        assume_sorted=assume_sorted,
+    output = spark.read.parquet(output_path).drop("chunk_id")
+    if assume_sorted:
+        named = with_new_names(output, work_mode=work_mode, assume_sorted=True)
+        return with_display_numbers(named, work_mode=work_mode)
+    # lp and lp_year are both dense ranks in url order: one key slice,
+    # one counts collect and one payload join number them together
+    numbered = with_sequences(
+        output.withColumn("work_mode", F.lit(work_mode))
+        .withColumn("__year", F.year("warc_ts").cast("int")),
+        "url",
+        {"lp": ("work_mode",), "lp_year": ("work_mode", "__year")},
     )
-    return with_display_numbers(named, work_mode=work_mode)
+    return (
+        numbered.withColumn("new_name", new_name_col())
+        .withColumn("display_number", display_number_col(work_mode))
+        .drop("__year")
+    )
 
 
 def lineage_report(spark: SparkSession, checkpoint_path: str) -> DataFrame:

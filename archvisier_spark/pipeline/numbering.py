@@ -20,11 +20,18 @@ price of attaching a global rank; an Iceberg table with a url sort order
 would eliminate it (ranks become a metadata-only merge on sorted scans).
 AQE partition coalescing is safe here: merged range partitions stay
 contiguous, so offsets remain correct.
+
+One key slice serves several sequences in the same order (``lp`` per
+work-mode and ``lp_year`` per work-mode and year): :func:`with_sequences`
+numbers them all with one pinned slice, one counts collect, one broadcast
+offsets table and one re-attach join.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
+from collections import Counter
+from itertools import groupby
+from typing import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -34,11 +41,24 @@ def with_sequence(
     order_col: str = "url",
     partition_cols: Sequence[str] = (),
     out_col: str = "lp",
-    num_range_partitions: int | None = None,
     keys_df: DataFrame | None = None,
 ) -> DataFrame:
     """Append a dense 1-based sequence in ``order_col`` order, restarting
-    per ``partition_cols`` group, without a single-task global sort.
+    per ``partition_cols`` group, without a single-task global sort — the
+    one-output form of :func:`with_sequences`."""
+    return with_sequences(df, order_col, {out_col: partition_cols}, keys_df)
+
+
+def with_sequences(
+    df: DataFrame,
+    order_col: str,
+    outs: Mapping[str, Sequence[str]],
+    keys_df: DataFrame | None = None,
+) -> DataFrame:
+    """Append one dense 1-based sequence per ``outs`` entry
+    (``out_col → partition_cols``), all in ``order_col`` order, each
+    restarting per its own group — from ONE pinned key slice, one counts
+    collect and one payload re-attach join.
 
     ``keys_df``: optional cheap source of the SAME key set (must be 1:1
     with ``df`` on ``key_cols``).  When ``df`` is the output of an
@@ -47,8 +67,9 @@ def with_sequence(
     the raw input keys instead (a column-pruned parquet scan of ``url``
     costs almost nothing)."""
     spark = df.sparkSession
-    n = num_range_partitions or spark.sparkContext.defaultParallelism
-    key_cols = [order_col, *partition_cols]
+    n = spark.sparkContext.defaultParallelism
+    group_cols = list(dict.fromkeys(c for cols in outs.values() for c in cols))
+    key_cols = [order_col, *group_cols]
 
     source = keys_df if keys_df is not None else df
     slim = source.select(*key_cols).repartitionByRange(n, F.col(order_col))
@@ -64,37 +85,45 @@ def with_sequence(
     # local mode has no executor loss, so the in-memory form is safe here.
     slim = slim.localCheckpoint(eager=True)
     slim = slim.withColumn("__pid", F.spark_partition_id())
-    w = Window.partitionBy("__pid", *partition_cols).orderBy(order_col)
-    slim = slim.withColumn("__rn", F.row_number().over(w))
+    for out_col, cols in outs.items():
+        w = Window.partitionBy("__pid", *cols).orderBy(order_col)
+        slim = slim.withColumn(f"__rn_{out_col}", F.row_number().over(w))
 
-    # one row per (physical partition, group): tiny — collect + prefix-sum
-    counts = (
-        slim.groupBy("__pid", *partition_cols)
-        .agg(F.count("*").alias("__cnt"))
-        .collect()
+    # one row per (physical partition, finest group): tiny — collect +
+    # prefix-sum every output's offsets in one pid-ordered sweep
+    counts = sorted(
+        slim.groupBy("__pid", *group_cols).agg(F.count("*").alias("__cnt")).collect(),
+        key=lambda r: r["__pid"],
     )
     if not counts:
         # empty input: createDataFrame([]) can't infer a schema — return the
-        # (empty) frame with a typed null sequence column instead of crashing
-        return df.withColumn(out_col, F.lit(None).cast("long"))
-    by_group: dict[tuple, list[tuple[int, int]]] = {}
-    for row in counts:
-        group = tuple(row[c] for c in partition_cols)
-        by_group.setdefault(group, []).append((row["__pid"], row["__cnt"]))
+        # (empty) frame with typed null sequence columns instead of crashing
+        for out_col in outs:
+            df = df.withColumn(out_col, F.lit(None).cast("long"))
+        return df
+    running = [Counter() for _ in outs]
     offset_rows = []
-    for group, pid_counts in by_group.items():
-        running = 0
-        for pid, cnt in sorted(pid_counts):
-            offset_rows.append((*group, pid, running))
-            running += cnt
+    for _, block in groupby(counts, key=lambda r: r["__pid"]):
+        block = list(block)
+        # a partition's offset in a group is the count of that group in
+        # all LOWER partitions: read every offset before adding this block
+        for row in block:
+            offset_rows.append((
+                *(row[c] for c in group_cols), row["__pid"],
+                *(run[tuple(row[c] for c in cols)]
+                  for run, cols in zip(running, outs.values())),
+            ))
+        for row in block:
+            for run, cols in zip(running, outs.values()):
+                run[tuple(row[c] for c in cols)] += row["__cnt"]
     offsets = spark.createDataFrame(
-        offset_rows, [*partition_cols, "__pid", "__offset"]
+        offset_rows, [*group_cols, "__pid", *(f"__off_{o}" for o in outs)]
     )
 
-    numbered = (
-        slim.join(F.broadcast(offsets), [*partition_cols, "__pid"])
-        .withColumn(out_col, (F.col("__offset") + F.col("__rn")).cast("long"))
-        .select(*key_cols, out_col)
+    numbered = slim.join(F.broadcast(offsets), [*group_cols, "__pid"]).select(
+        *key_cols,
+        *((F.col(f"__off_{o}") + F.col(f"__rn_{o}")).cast("long").alias(o)
+          for o in outs),
     )
     return df.join(numbered, key_cols)
 

@@ -116,7 +116,7 @@ def _split_batches(language: str, ocr_mode: str = "text", ocr_engine=None):
                     from archvisier_spark.kernel.pdf import rasterize_pdf_page
 
                     rasterize = eng.rasterize_fn or rasterize_pdf_page
-                    mark = len(cols["url"])
+                    mark, mark_acc = len(cols["url"]), acc
                     try:
                         n_pages = pdf_page_count(payload)
                         for p in range(1, n_pages + 1):
@@ -125,6 +125,7 @@ def _split_batches(language: str, ocr_mode: str = "text", ocr_engine=None):
                     except Exception as e:
                         for lst in cols.values():
                             del lst[mark:]
+                        acc = mark_acc
                         emit(url, warc_ts, lang, fmt, -1,
                              f"{OCR_ERROR_PREFIX}{e}",
                              traceback.format_exc(), n_bytes)

@@ -22,6 +22,7 @@ def test_job_cli_synthesize_resume_finalize(tmp_path):
     assert r1.returncode == 0, r1.stderr[-2000:]
     rep1 = json.loads([l for l in r1.stdout.splitlines() if l.startswith("{")][-1])
     assert rep1["chunks_complete"] == 2
+    assert rep1["spark_jobs"] > 0
 
     # second invocation finishes the rest, finalizes, and exports XLSX
     xlsx = str(tmp_path / "results.xlsx")
@@ -32,6 +33,7 @@ def test_job_cli_synthesize_resume_finalize(tmp_path):
     assert rep2["chunks_complete"] == 6
     assert rep2["lineage_docs"] == 80
     assert rep2["finalized_rows"] == 80
+    assert rep2["spark_jobs"] > rep1["spark_jobs"]  # finalize adds jobs
 
     # the styled workbook is a real OOXML zip with 80 data rows
     import xml.etree.ElementTree as ET

@@ -148,3 +148,80 @@ def test_legacy_checkpoint_without_run_id(spark, docs, tmp_path):
 
     # a second pass over the mixed dir is still a no-op
     assert run_resumable(spark, docs, out, ckpt, n_chunks=N_CHUNKS) == []
+
+
+def test_resume_redoes_failed_chunk_under_next_run_id(spark, docs, tmp_path):
+    """One checkpoint read yields both the done set and the run counter:
+    with ok rows from runs 0-2 and only a non-ok row for chunk c, chunk c
+    alone is redone and its new row carries run_id 3."""
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    c = 3
+    rows = [(k, 1, 100, 0, 0, "ok", k % 3) for k in range(N_CHUNKS) if k != c]
+    rows.append((c, 1, 100, 1, 0, "failed", 1))
+    spark.createDataFrame(
+        rows,
+        "chunk_id int, n_docs long, n_bytes long, n_errors long, checksum long, "
+        "status string, run_id int",
+    ).write.parquet(ckpt)
+
+    assert completed_chunks(spark, ckpt) == set(range(N_CHUNKS)) - {c}
+    assert run_resumable(spark, docs, out, ckpt, n_chunks=N_CHUNKS) == [c]
+    in_chunk = docs.filter(chunk_id_col(F.col("url"), N_CHUNKS) == c).count()
+    latest = {r["chunk_id"]: r for r in lineage_report(spark, ckpt).collect()}
+    assert latest[c]["run_id"] == 3 and latest[c]["status"] == "ok"
+    assert latest[c]["n_docs"] == in_chunk == spark.read.parquet(out).count()
+    assert run_resumable(spark, docs, out, ckpt, n_chunks=N_CHUNKS) == []
+
+
+@pytest.mark.parametrize("mode", ["KP", "SA"])
+def test_finalize_names_matches_separate_numbering(spark, tmp_path, mode):
+    """The fused lp + lp_year pass equals the two separate passes
+    (with_new_names, then with_display_numbers) over a chunk output that
+    spans four warc_ts years and every range partition."""
+    from datetime import datetime
+
+    from archvisier_spark.kernel.naming import counter_key, next_display_number
+    from archvisier_spark.pipeline.extract import with_display_numbers, with_new_names
+
+    n = 400
+    rows = [
+        (
+            f"https://archiwum.example/{(i * 7919) % n:04d}",
+            datetime(2021 + i % 4, 1 + i % 12, 1 + i % 28, i % 24),
+            f"II K {i % 13}/2{i % 4}" if i % 3 else "",
+            f"{i}/2024" if i % 5 else "",
+            "Sąd Rejonowy" if i % 2 else "",
+            "Wyrok" if i % 7 else "",
+            f"sprawa {i % 11}",
+            i % N_CHUNKS,
+        )
+        for i in range(n)
+    ]
+    path = str(tmp_path / "out")
+    spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, sygnatura_sprawy string, "
+        "numer_dokumentu string, nadawca_odbiorca string, typ_dokumentu string, "
+        "w_sprawie string, chunk_id int",
+    ).write.partitionBy("chunk_id").parquet(path)
+    assert spark.sparkContext.defaultParallelism >= 4  # range partitions
+
+    cols = ["lp", "lp_year", "display_number", "new_name"]
+    fused = {r["url"]: tuple(r[c] for c in cols)
+             for r in finalize_names(spark, path, work_mode=mode).collect()}
+    separate = with_display_numbers(
+        with_new_names(spark.read.parquet(path).drop("chunk_id"), work_mode=mode),
+        work_mode=mode,
+    )
+    want = {r["url"]: tuple(r[c] for c in cols) for r in separate.collect()}
+    assert fused == want
+    # both against the reference's sequential counter loop over sorted urls
+    counters: dict = {}
+    sa: dict = {}
+    by_url = sorted(rows)
+    for lp, (url, ts, *_rest) in enumerate(by_url, start=1):
+        disp = next_display_number(mode, ts.year, counters, sa)
+        lp_year = (sa if mode == "SA" else counters)[counter_key(mode, ts.year)]
+        assert fused[url][:3] == (lp, lp_year, disp), url
+    assert len({ts.year for _, ts, *_rest in rows}) == 4

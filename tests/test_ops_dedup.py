@@ -99,3 +99,21 @@ def test_fingerprint_order_sensitive_and_deterministic(spark):
     assert rows[1] == rows[3]            # deterministic
     assert rows[1] != rows[2]            # rolling: order matters
     assert rows[4] is not None           # empty text → seed value, not null
+
+
+def test_signatures_from_shingles_bigint_lanes_and_empty_array(spark):
+    """The sketch is array<bigint>, and an empty shingle array yields the
+    untouched all-Long.MAX accumulator (every empty doc shares it)."""
+    from pyspark.sql import types as T
+
+    from archvisier_spark.ops.dedup import signatures_from_shingles
+
+    sh = spark.createDataFrame(
+        [(1, ["a b c", "b c d"]), (2, [])],
+        "doc_id int, sh array<string>",
+    )
+    sigs = signatures_from_shingles(sh, k=4)
+    assert sigs.schema["sig"].dataType == T.ArrayType(T.LongType(), False)
+    got = {r["doc_id"]: r["sig"] for r in sigs.collect()}
+    assert got[2] == [(1 << 63) - 1] * 4
+    assert all(v < (1 << 31) for v in got[1])

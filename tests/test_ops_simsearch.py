@@ -88,3 +88,13 @@ def test_ann_scores_are_exact_cosine(spark):
     for pair, score in ann.items():
         if pair in brute:
             assert abs(score - brute[pair]) < 1e-9
+
+
+@pytest.mark.parametrize("bad", [float("inf"), float("-inf"), float("nan")])
+def test_lit_vec_rejects_non_finite_components(bad):
+    """A non-finite literal would parse to NULL in Spark and null every
+    downstream cosine; the helper must fail loudly instead."""
+    from archvisier_spark.ops.simsearch import _lit_vec
+
+    with pytest.raises(ValueError, match="component 1"):
+        _lit_vec([0.5, bad, 1.0])

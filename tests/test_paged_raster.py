@@ -193,3 +193,35 @@ def test_split_stage_mid_document_rasterizer_failure_aborts_document():
     assert int(bad_rows.iloc[0]["page_idx"]) == -1
     assert bad_rows.iloc[0]["page_text"].startswith(OCR_ERROR_PREFIX)
     assert len(out[out["url"] == "warc://abort/good"]) == 2
+
+
+def test_split_stage_retraction_restores_flush_accumulator(monkeypatch):
+    """A rasteriser failure after emitting pages retracts those rows AND
+    their bytes: the next frame must not flush before the buffered
+    payload actually reaches the budget."""
+    import pandas as pd
+
+    from archvisier_spark.kernel.pdf import build_pdf
+    from archvisier_spark.pipeline import paged
+
+    def exploding_rasterize(payload: bytes, page: int = 1, dpi: int = 200) -> bytes:
+        if page == 5 and b"zly" in payload:
+            raise RuntimeError("pdftoppm crashed (simulated)")
+        return fake_rasterize(payload, page=page, dpi=dpi)
+
+    eng = RasterEngine(exploding_rasterize, fake_ocr, None)
+    bad = ("warc://acc/bad", None,
+           build_pdf([[f"zly strona {p}"] for p in range(6)]), "pl")
+    good = [(f"warc://acc/{i}", None,
+             build_pdf([[f"strona {p} dok {i}"] for p in range(2)]), "pl")
+            for i in range(8)]
+    batch = pd.DataFrame([bad, *good], columns=["url", "warc_ts", "html", "lang"])
+    # four retracted 20-byte rasters: a stale accumulator would flush the
+    # first frame with only the error row and one document buffered
+    monkeypatch.setattr(paged, "SPLIT_FLUSH_BYTES", 120)
+    frames = list(paged._split_batches("auto", "raster", eng)(iter([batch])))
+    assert len(frames) > 1
+    for frame in frames[:-1]:
+        payload = sum(len(b) if b is not None else 0 for b in frame["page_blob"])
+        payload += sum(len(t) for t in frame["page_text"])
+        assert payload >= paged.SPLIT_FLUSH_BYTES, frame["url"].tolist()

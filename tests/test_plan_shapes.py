@@ -92,3 +92,17 @@ def test_numbering_joins_pruned_keys_not_payload(spark, tmp_path):
     assert "html" not in plan.split("Scan ExistingRDD[url", 1)[1].split("]", 1)[0]
     # exactly one parquet scan feeds the payload (extraction runs once)
     assert plan.count("FileScan parquet") == 1
+
+
+def test_finalize_numbers_from_one_key_slice(spark, tmp_path):
+    """finalize_names numbers lp and lp_year from ONE pinned key slice
+    re-attached to ONE payload scan — not one slice and scan each."""
+    from archvisier_spark.corpus import corpus_df
+    from archvisier_spark.pipeline.extract import extract_documents
+    from archvisier_spark.pipeline.lineage import finalize_names
+
+    path = str(tmp_path / "out")
+    extract_documents(corpus_df(spark, 40, seed=4, partitions=2)).write.parquet(path)
+    plan = plan_of(finalize_names(spark, path))
+    assert plan.count("Scan ExistingRDD[url") == 1
+    assert plan.count("FileScan parquet") == 1
