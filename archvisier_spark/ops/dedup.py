@@ -254,38 +254,6 @@ def q_minhash_lsh_dedup(spark, sf_dir):
     return verified.select("id_a", "id_b", "jaccard")
 
 
-def q_minhash_lsh_dedup_r2(spark, sf_dir):
-    """The round-2 MinHash plan, kept VERBATIM for paired benchmarking
-    (never registered with the driver).  Differences vs the current plan:
-    shingling runs twice (once under the sketch pin, once for the verify
-    table) and there is no pre-hash repartition, so the pushed-down
-    doc_id filter leaves the expensive hashing on ~1 scan partition.
-    bench.py --paired interleaves this against q_minhash_lsh_dedup in one
-    session to turn the r2→r3 bench delta into signal (round-3 verdict
-    #3: two consecutive recorded regressions, spreads larger than the
-    deltas)."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 2000)
-    sigs = minhash_signatures(docs).localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(sigs)
-    sh = docs.select("doc_id", shingle_col("text").alias("sh")).localCheckpoint(
-        eager=True
-    )
-    verified = (
-        cands.join(sh.withColumnRenamed("doc_id", "id_a").withColumnRenamed("sh", "sh_a"), "id_a")
-        .join(sh.withColumnRenamed("doc_id", "id_b").withColumnRenamed("sh", "sh_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= 0.5)
-    )
-    return verified.select("id_a", "id_b", "jaccard")
-
-
 _MINHASH_LSH_SQL = """
 WITH sh AS (
   SELECT doc_id,

@@ -5,20 +5,20 @@ parallel per-document OCR → metadata cascade → sequential numbering →
 rename.  Spark shape::
 
     documents(url, warc_ts, html, text, lang)
-      → size-aware repartition (skew defusal, SURVEY.md §4)
-      → mapInPandas(extract_batch)          # Arrow batches, kernel per doc
+      → mapInArrow(extract_batches)         # on the scan splits, kernel per doc
       → with_sequence(lp)                    # scalable counter semantics
       → new_name via filename_for            # X14
 
-All per-document logic is the pure kernel, executed inside Arrow-batched
-``mapInPandas`` so Python is entered once per batch, never per row on the
+All per-document logic is the pure kernel, executed inside
+``mapInArrow`` so Python is entered once per batch, never per row on the
 driver (north rule).  Errors stay data: a malformed payload produces a row
 with the reference's error literals, never a task failure.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+from collections import defaultdict
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -91,44 +91,14 @@ def info_spans(text: str, info: dict) -> list[dict]:
     return spans
 
 
+_FIELD_NAMES = [f.name for f in EXTRACT_SCHEMA.fields]
+
+# the cascade fields copied verbatim into same-named output columns
+_INFO_FIELDS = ("data", "nadawca_odbiorca", "w_sprawie", "numer_dokumentu",
+                "sygnatura_sprawy", "typ_dokumentu")
 # keys of the fixed info record — anything else in the cascade output is a
 # dynamic extra (overflow MAP column)
-_CORE_INFO_KEYS = frozenset(
-    ("data", "nadawca_odbiorca", "w_sprawie", "numer_dokumentu",
-     "sygnatura_sprawy", "typ_dokumentu", "status", "colors")
-)
-
-
-def _metadata_columns(cols: dict, url, warc_ts, lang, fmt, text, status, n_bytes,
-                      work_mode: str, case_signature: str,
-                      entity_provider=None, llm_tier=None) -> None:
-    """Append one output row (cascade + spans) to the column accumulators."""
-    info = extract_info_from_text(text, url, work_mode, case_signature,
-                                  entity_provider=entity_provider,
-                                  llm_tier=llm_tier)
-    cols["url"].append(url)
-    cols["warc_ts"].append(warc_ts)
-    cols["lang"].append(lang)
-    cols["format"].append(fmt)
-    cols["extracted_text"].append(text)
-    cols["status"].append(status)
-    cols["data"].append(info["data"])
-    cols["nadawca_odbiorca"].append(info["nadawca_odbiorca"])
-    cols["w_sprawie"].append(info["w_sprawie"])
-    cols["numer_dokumentu"].append(info["numer_dokumentu"])
-    cols["sygnatura_sprawy"].append(info["sygnatura_sprawy"])
-    cols["typ_dokumentu"].append(info["typ_dokumentu"])
-    cols["doc_status"].append(info["status"])
-    cols["colors"].append(info["colors"])
-    cols["extra"].append(
-        {k: str(v) for k, v in info.items() if k not in _CORE_INFO_KEYS}
-    )
-    cols["spans"].append(info_spans(text, info))
-    cols["n_chars"].append(len(text))
-    cols["n_bytes"].append(n_bytes)
-
-
-_FIELD_NAMES = [f.name for f in EXTRACT_SCHEMA.fields]
+_CORE_INFO_KEYS = frozenset((*_INFO_FIELDS, "status", "colors"))
 
 
 def _build_provider(entity_rules):
@@ -141,67 +111,53 @@ def _build_provider(entity_rules):
     return RuleNer(entity_rules)
 
 
-def make_extract_batch(language: str, work_mode: str, case_signature: str,
-                       entity_rules=None, llm_tier=None,
-                       use_content_type: bool = False,
-                       ocr_mode: str = "text", ocr_engine=None):
-    """Build the mapInPandas function (closure keeps config serialisable)."""
-    provider = _build_provider(entity_rules)
-
-    def extract_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            # column-wise accumulation: cheaper pandas/Arrow materialisation
-            # than a list of per-row dicts
-            cols: dict[str, list] = {name: [] for name in _FIELD_NAMES}
-            cts = batch["content_type"] if use_content_type else [None] * len(batch)
-            for url, warc_ts, html, lang, ct in zip(
-                batch["url"], batch["warc_ts"], batch["html"], batch["lang"], cts
-            ):
-                payload = bytes(html) if html is not None else None
-                text, status, fmt = extract_document_text(payload, language, ct,
-                                                          ocr_mode, ocr_engine)
-                _metadata_columns(cols, url, warc_ts, lang, fmt, text, status,
-                                  len(payload) if payload else 0,
-                                  work_mode, case_signature,
-                                  entity_provider=provider, llm_tier=llm_tier)
-            yield pd.DataFrame(cols, columns=_FIELD_NAMES)
-
-    return extract_batch
+def _cascade(work_mode: str, case_signature: str, entity_rules, llm_tier):
+    """``cascade(text, url)`` with the run's configuration bound."""
+    return functools.partial(
+        extract_info_from_text, mode=work_mode,
+        case_signature_override=case_signature,
+        entity_provider=_build_provider(entity_rules), llm_tier=llm_tier,
+    )
 
 
-def _arrow_out_schema(in_schema):
-    """Arrow output schema for the extraction batch, inheriting the input's
-    exact timestamp type (tz metadata must round-trip untouched)."""
+def _append_metadata(cols: dict, text: str, url: str, cascade) -> None:
+    """Run the cascade on one row and append its fields, ``doc_status``,
+    ``colors``, ``extra``, ``spans`` and ``n_chars`` to the column
+    accumulators — the one place a cascade result becomes output columns."""
+    info = cascade(text, url)
+    for name in _INFO_FIELDS:
+        cols[name].append(info[name])
+    cols["doc_status"].append(info["status"])
+    cols["colors"].append(info["colors"])
+    cols["extra"].append(
+        {k: str(v) for k, v in info.items() if k not in _CORE_INFO_KEYS}
+    )
+    cols["spans"].append(info_spans(text, info))
+    cols["n_chars"].append(len(text))
+
+
+@functools.cache
+def _arrow_types() -> dict:
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    return {f.name: to_arrow_type(f.dataType) for f in EXTRACT_SCHEMA.fields}
+
+
+def _record_batch(batch, cols: dict):
+    """The EXTRACT_SCHEMA output batch.  Every output column the input
+    batch already carries passes through as the input's own Arrow buffer
+    (zero-copy, timestamp tz metadata untouched); every other column is
+    built from the accumulators."""
     import pyarrow as pa
 
-    string_fields = [
-        "format", "extracted_text", "status", "data", "nadawca_odbiorca",
-        "w_sprawie", "numer_dokumentu", "sygnatura_sprawy", "typ_dokumentu",
-        "doc_status",
-    ]
-    return pa.schema(
+    carried = set(batch.schema.names)
+    types = _arrow_types()
+    return pa.RecordBatch.from_arrays(
         [
-            pa.field("url", pa.string()),
-            pa.field("warc_ts", in_schema.field("warc_ts").type),
-            pa.field("lang", pa.string()),
-            *[pa.field(n, pa.string()) for n in string_fields],
-            pa.field("colors", pa.map_(pa.string(), pa.string())),
-            pa.field("extra", pa.map_(pa.string(), pa.string())),
-            pa.field(
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            pa.field("start", pa.int32()),
-                            pa.field("end", pa.int32()),
-                            pa.field("label", pa.string()),
-                        ]
-                    )
-                ),
-            ),
-            pa.field("n_chars", pa.int64()),
-            pa.field("n_bytes", pa.int64()),
-        ]
+            batch.column(n) if n in carried else pa.array(cols[n], type=types[n])
+            for n in _FIELD_NAMES
+        ],
+        names=_FIELD_NAMES,
     )
 
 
@@ -209,22 +165,15 @@ def make_extract_arrow(language: str, work_mode: str, case_signature: str,
                        entity_rules=None, llm_tier=None,
                        use_content_type: bool = False,
                        ocr_mode: str = "text", ocr_engine=None):
-    """mapInArrow variant of :func:`make_extract_batch` — identical kernel
-    calls, minimal memory traffic: the pandas materialisation is skipped on
-    BOTH sides, and the columns the kernel never touches (url array for
-    output, warc_ts, lang) pass through as the input's own Arrow buffers
-    (zero-copy), so only html payload bytes and the computed fields cross
-    the Arrow↔Python object boundary."""
-    import pyarrow as pa
-
-    provider = _build_provider(entity_rules)
-    computed = [n for n in _FIELD_NAMES if n not in ("url", "warc_ts", "lang")]
+    """The mapInArrow extraction stage: sniff → extract → cascade → spans
+    per document.  No pandas materialisation on either side: only the url,
+    html payload (and ``content_type``) columns and the computed fields
+    cross the Arrow↔Python object boundary; url, warc_ts and lang go back
+    out as the input's own Arrow buffers."""
+    cascade = _cascade(work_mode, case_signature, entity_rules, llm_tier)
 
     def extract_batches(batches):
-        out_schema = None
         for batch in batches:
-            if out_schema is None:
-                out_schema = _arrow_out_schema(batch.schema)
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
             # transport-layer charset (WARC Content-Type), when the table
@@ -234,72 +183,36 @@ def make_extract_arrow(language: str, work_mode: str, case_signature: str,
                 if use_content_type
                 else [None] * len(urls)
             )
-            cols: dict[str, list] = {name: [] for name in computed}
+            cols: dict[str, list] = defaultdict(list)
             for url, html, ct in zip(urls, htmls, cts):
                 payload = bytes(html) if html is not None else None
                 text, status, fmt = extract_document_text(payload, language, ct,
                                                           ocr_mode, ocr_engine)
-                info = extract_info_from_text(text, url, work_mode, case_signature,
-                                              entity_provider=provider,
-                                              llm_tier=llm_tier)
                 cols["format"].append(fmt)
                 cols["extracted_text"].append(text)
                 cols["status"].append(status)
-                cols["data"].append(info["data"])
-                cols["nadawca_odbiorca"].append(info["nadawca_odbiorca"])
-                cols["w_sprawie"].append(info["w_sprawie"])
-                cols["numer_dokumentu"].append(info["numer_dokumentu"])
-                cols["sygnatura_sprawy"].append(info["sygnatura_sprawy"])
-                cols["typ_dokumentu"].append(info["typ_dokumentu"])
-                cols["doc_status"].append(info["status"])
-                cols["colors"].append(info["colors"])
-                cols["extra"].append(
-                    {k: str(v) for k, v in info.items() if k not in _CORE_INFO_KEYS}
-                )
-                cols["spans"].append(info_spans(text, info))
-                cols["n_chars"].append(len(text))
                 cols["n_bytes"].append(len(payload) if payload else 0)
-            arrays = [
-                batch.column("url"),
-                batch.column("warc_ts"),
-                batch.column("lang"),
-                *[
-                    pa.array(cols[f.name], type=f.type)
-                    for f in out_schema
-                    if f.name in computed
-                ],
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=out_schema)
+                _append_metadata(cols, text, url, cascade)
+            yield _record_batch(batch, cols)
 
     return extract_batches
 
 
-def make_metadata_batch(work_mode: str, case_signature: str, entity_rules=None,
+def make_metadata_arrow(work_mode: str, case_signature: str, entity_rules=None,
                         llm_tier=None):
-    """mapInPandas stage over rows whose text is ALREADY extracted
+    """The mapInArrow stage over rows whose text is ALREADY extracted
     (page-parallel path): runs only the cascade + spans."""
-    provider = _build_provider(entity_rules)
+    cascade = _cascade(work_mode, case_signature, entity_rules, llm_tier)
 
-    def metadata_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def metadata_batches(batches):
         for batch in batches:
-            cols: dict[str, list] = {name: [] for name in _FIELD_NAMES}
-            for url, warc_ts, lang, fmt, text, status, n_bytes in zip(
-                batch["url"], batch["warc_ts"], batch["lang"], batch["format"],
-                batch["extracted_text"], batch["status"], batch["n_bytes"],
-            ):
-                _metadata_columns(cols, url, warc_ts, lang, fmt, text, status,
-                                  int(n_bytes), work_mode, case_signature,
-                                  entity_provider=provider, llm_tier=llm_tier)
-            yield pd.DataFrame(cols, columns=_FIELD_NAMES)
+            cols: dict[str, list] = defaultdict(list)
+            for url, text in zip(batch.column("url").to_pylist(),
+                                 batch.column("extracted_text").to_pylist()):
+                _append_metadata(cols, text, url, cascade)
+            yield _record_batch(batch, cols)
 
-    return metadata_batch
-
-
-# Fine-grained task multiple: 8 tasks per core keeps the scheduler's
-# finish-time balancing effective against per-document cost variance (the
-# Spark analog of the reference's work-stealing pool,
-# training_ocr.cpp:305-311) without meaningful scheduling overhead.
-TASKS_PER_CORE = 8
+    return metadata_batches
 
 
 def extract_documents(
@@ -309,17 +222,14 @@ def extract_documents(
     case_signature: str = "",
     partitions: int | None = None,
     paged_threshold: int | None = None,
-    shuffle: bool = False,
     entity_rules=None,
     llm_tier=None,
-    arrow: bool = True,
     ocr_mode: str = "text",
     ocr_engine=None,
 ) -> DataFrame:
     """Distributed sniff→extract→cascade over the north-rule table.
 
-    **Map-only by default** (``shuffle=False``): the extraction UDF runs
-    directly on the scan partitions, so the megabyte payload column never
+    **Map-only**: the extraction UDF runs directly on the scan partitions, so the megabyte payload column never
     crosses a shuffle — measured on this box, feeding Arrow batches out of
     shuffle files anti-scales (32 threads 2.5× slower than 8), while
     scan-fed batches scale cleanly.  Balance then comes from input splits:
@@ -328,14 +238,10 @@ def extract_documents(
     table control split width; the corpus generator and lineage chunks
     both emit fine-grained files.
 
-    ``shuffle=True``: for pathologically-laid-out inputs (one giant file,
-    no row-group splits) fall back to an explicit url-hash fan-out into
-    ``cores × TASKS_PER_CORE`` tasks (the work-stealing analog,
-    training_ocr.cpp:305-311).
-
     ``paged_threshold``: optionally route payloads above this many bytes
     through page-level parallelism (pipeline/paged.py) — the answer for
-    documents so large that even one-doc-per-task is too coarse.
+    documents so large that even one-doc-per-task is too coarse;
+    ``partitions`` sizes that path's page fan-out.
 
     ``ocr_engine``: optional :class:`~archvisier_spark.kernel.document.
     RasterEngine` overriding the raster path's rasterise/OCR/detect hooks
@@ -362,44 +268,28 @@ def extract_documents(
     from archvisier_spark.session import MAX_PARTITION_BYTES
 
     spark.conf.set("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
-    n_parts = partitions or spark.sparkContext.defaultParallelism
     # optional transport-layer charset column (WARC Content-Type header):
     # propagated into the decode when the table carries it
     has_ct = "content_type" in df.columns
     in_cols = ["url", "warc_ts", "html", "lang"] + (["content_type"] if has_ct else [])
     cols = df.select(*in_cols)
+    fn = make_extract_arrow(language, work_mode, case_signature,
+                            entity_rules, llm_tier, use_content_type=has_ct,
+                            ocr_mode=ocr_mode, ocr_engine=ocr_engine)
+    if paged_threshold is None:
+        return cols.mapInArrow(fn, EXTRACT_SCHEMA)
 
-    def run(frame: DataFrame) -> DataFrame:
-        if shuffle:
-            frame = frame.repartition(n_parts * TASKS_PER_CORE, "url")
-        if arrow:
-            # mapInArrow: same kernel, no pandas materialisation, untouched
-            # columns pass through as the input's own Arrow buffers
-            fn = make_extract_arrow(language, work_mode, case_signature,
-                                    entity_rules, llm_tier,
-                                    use_content_type=has_ct,
-                                    ocr_mode=ocr_mode, ocr_engine=ocr_engine)
-            return frame.mapInArrow(fn, EXTRACT_SCHEMA)
-        fn = make_extract_batch(language, work_mode, case_signature,
-                                entity_rules, llm_tier,
-                                use_content_type=has_ct,
-                                ocr_mode=ocr_mode, ocr_engine=ocr_engine)
-        return frame.mapInPandas(fn, EXTRACT_SCHEMA)
+    from archvisier_spark.pipeline.paged import extract_documents_paged
 
-    if paged_threshold is not None:
-        from archvisier_spark.pipeline.paged import extract_documents_paged
-
-        huge = cols.filter(F.length("html") >= paged_threshold)
-        rest = cols.filter(F.length("html") < paged_threshold)
-        return run(rest).unionByName(
-            extract_documents_paged(
-                huge, language=language, work_mode=work_mode,
-                case_signature=case_signature, partitions=n_parts,
-                ocr_mode=ocr_mode, ocr_engine=ocr_engine,
-            )
+    huge = cols.filter(F.length("html") >= paged_threshold)
+    rest = cols.filter(F.length("html") < paged_threshold)
+    return rest.mapInArrow(fn, EXTRACT_SCHEMA).unionByName(
+        extract_documents_paged(
+            huge, language=language, work_mode=work_mode,
+            case_signature=case_signature, partitions=partitions,
+            ocr_mode=ocr_mode, ocr_engine=ocr_engine,
         )
-
-    return run(cols)
+    )
 
 
 def observed_extraction(df: DataFrame, **kwargs):

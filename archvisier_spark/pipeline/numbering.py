@@ -62,7 +62,7 @@ def with_sequences(
 
     ``keys_df``: optional cheap source of the SAME key set (must be 1:1
     with ``df`` on ``key_cols``).  When ``df`` is the output of an
-    expensive transform (e.g. the extraction mapInPandas), deriving the
+    expensive transform (e.g. the extraction mapInArrow), deriving the
     counting slice from ``df`` would recompute that transform twice — pass
     the raw input keys instead (a column-pruned parquet scan of ``url``
     costs almost nothing)."""

@@ -11,7 +11,8 @@ processing/ocr.py:229-230).  Dataflow::
                dominant cost, now parallel across pages of one doc)
              → groupBy(url): array_sort(collect_list(struct(idx, text)))
                → concat(page + "\\n")                   # reassembly
-             → mapInPandas: metadata cascade + spans
+             → mapInArrow: metadata cascade + spans (the extraction
+               stage's row builder)
 
 Byte-identity: the reassembled text equals the doc-at-once path exactly —
 pinned by tests/test_paged_extract.py differentials, including error rows
@@ -35,7 +36,7 @@ from archvisier_spark.kernel.document import (
 from archvisier_spark.kernel.pdf import pdf_page_count, pdf_page_texts
 from archvisier_spark.kernel.sniffer import FORMAT_PDF, sniff_format
 from archvisier_spark.kernel.textfix import correct_text, detect_lang
-from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, make_metadata_batch
+from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, make_metadata_arrow
 
 # page_idx >= 0: a raw PDF page awaiting repair; page_idx == -1: a document
 # already fully extracted in the split stage (errors, HTML, plain text).
@@ -316,5 +317,5 @@ def extract_documents_paged(
         )
     )
 
-    fn = make_metadata_batch(work_mode, case_signature)
-    return assembled.repartition(n_parts, "url").mapInPandas(fn, EXTRACT_SCHEMA)
+    fn = make_metadata_arrow(work_mode, case_signature)
+    return assembled.repartition(n_parts, "url").mapInArrow(fn, EXTRACT_SCHEMA)

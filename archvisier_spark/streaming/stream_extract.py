@@ -1,7 +1,7 @@
 """Streaming extraction + windowed event aggregation.
 
 Both transforms are the exact batch dataflows re-bound to ``readStream``:
-Structured Streaming's incremental planner runs the same mapInPandas /
+Structured Streaming's incremental planner runs the same mapInArrow /
 aggregation logical plans per micro-batch, which is what makes the batch
 differential tests meaningful for the streaming path too.
 """
@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, make_extract_batch
+from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, make_extract_arrow
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -39,8 +39,8 @@ def stream_extract(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-    fn = make_extract_batch(language, work_mode, "")
-    return stream.select("url", "warc_ts", "html", "lang").mapInPandas(fn, EXTRACT_SCHEMA)
+    fn = make_extract_arrow(language, work_mode, "")
+    return stream.select("url", "warc_ts", "html", "lang").mapInArrow(fn, EXTRACT_SCHEMA)
 
 
 def stream_hourly_counts(

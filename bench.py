@@ -133,9 +133,6 @@ def throughput_once(master: str) -> dict:
 # Clamped to ≥1 so the output dict is always populated.
 BENCH_TRIALS = int(os.environ.get("SPARK_GRAFT_BENCH_TRIALS", "7"))
 EXTRACT_TRIALS = max(1, int(os.environ.get("SPARK_GRAFT_EXTRACT_TRIALS", "5")))
-# interleaved current-vs-r2-plan rounds for dedup_minhash_lsh (the
-# round-3 open question); 0 disables
-PAIRED_ROUNDS = int(os.environ.get("SPARK_GRAFT_PAIRED_ROUNDS", "5"))
 
 
 def _iqr(samples: list[float]) -> float:
@@ -145,40 +142,6 @@ def _iqr(samples: list[float]) -> float:
         return max(samples) - min(samples)
     q1, _, q3 = statistics.quantiles(samples, n=4)
     return q3 - q1
-
-
-def paired_minhash(spark) -> dict:
-    """Interleaved A/B of the current minhash plan vs the round-2 plan in
-    ONE session (same estimator as the scaling protocol): per-round ratio
-    current/legacy, median over rounds — cancels noise-window drift that
-    across-session medians cannot.  Alternates run order each round so
-    JVM/cache warmth doesn't systematically favour one side."""
-    import statistics
-
-    from archvisier_spark.ops.dedup import q_minhash_lsh_dedup, q_minhash_lsh_dedup_r2
-
-    def run(fn) -> float:
-        t0 = time.time()
-        fn(spark, SF_DIR).count()
-        return time.time() - t0
-
-    cur, legacy = [], []
-    for rnd in range(PAIRED_ROUNDS):
-        order = (
-            [(cur, q_minhash_lsh_dedup), (legacy, q_minhash_lsh_dedup_r2)]
-            if rnd % 2 == 0
-            else [(legacy, q_minhash_lsh_dedup_r2), (cur, q_minhash_lsh_dedup)]
-        )
-        for bucket, fn in order:
-            bucket.append(run(fn))
-    ratios = [c / l for c, l in zip(cur, legacy)]
-    return {
-        "rounds": PAIRED_ROUNDS,
-        "current_median_sec": round(statistics.median(cur), 3),
-        "r2_plan_median_sec": round(statistics.median(legacy), 3),
-        "ratio_current_over_r2_median": round(statistics.median(ratios), 4),
-        "ratios": [round(r, 4) for r in ratios],
-    }
 
 
 def main_bench() -> None:
@@ -227,7 +190,6 @@ def main_bench() -> None:
     queries = {n: round(statistics.median(s), 3) for n, s in samples.items()}
     spread = {n: round(_iqr(s), 3) for n, s in samples.items()}
     minmax = {n: round(max(s) - min(s), 3) for n, s in samples.items()}
-    paired = paired_minhash(spark) if PAIRED_ROUNDS else None
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     total = round(sum(queries.values()), 3)
     out = {
@@ -285,8 +247,6 @@ def main_bench() -> None:
             statistics.median(hist32), 1
         )
         out["scaling_series_runs"] = len(hist32)
-    if paired:
-        out["paired_minhash_vs_r2_plan"] = paired
     print(json.dumps(out))
     spark.stop()
 

@@ -187,15 +187,12 @@ def test_content_type_column_propagates_through_pipeline(spark):
         ("u1", ts, html, "pl", "text/html; charset=windows-1250"),
         ("u2", ts, html, "pl", None),  # no header → meta/utf-8 path
     ]
-    for arrow in (True, False):
-        out = {
-            r["url"]: r["extracted_text"]
-            for r in extract_documents(
-                spark.createDataFrame(rows, schema), arrow=arrow
-            ).collect()
-        }
-        assert POLISH in out["u1"], f"arrow={arrow}"
-        assert POLISH not in out["u2"], f"arrow={arrow}"  # mangled w/o header
+    out = {
+        r["url"]: r["extracted_text"]
+        for r in extract_documents(spark.createDataFrame(rows, schema)).collect()
+    }
+    assert POLISH in out["u1"]
+    assert POLISH not in out["u2"]  # mangled w/o header
     assert "content_type" not in extract_documents(
         spark.createDataFrame(rows, schema)
     ).columns

@@ -122,11 +122,12 @@ def test_errors_are_rows_not_failures(spark):
     assert rows["u2"]["extracted_text"] == ""
 
 
-def test_arrow_equals_pandas_on_adversarial_payloads(spark):
-    """The mapInArrow hot path must match the mapInPandas variant
-    byte-for-byte on hostile inputs: null payloads, invalid utf-8, NUL
-    bytes, BOM'd utf-16 HTML, legacy-codec HTML, truncated PDF magic,
-    and a multi-hundred-KB document."""
+def test_extraction_equals_kernel_on_adversarial_payloads(spark):
+    """The distributed extraction must match the single-doc kernel
+    (extract_document_text → extract_info_from_text → info_spans) per row,
+    byte-for-byte, on hostile inputs: null payloads, invalid utf-8, NUL
+    bytes, BOM'd utf-16 HTML, legacy-codec HTML, truncated PDF magic, and a
+    multi-hundred-KB document."""
     import pandas as pd
 
     big_html = (
@@ -156,11 +157,27 @@ def test_arrow_equals_pandas_on_adversarial_payloads(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    a = {r["url"]: r.asDict() for r in extract_documents(df, arrow=True, partitions=3).collect()}
-    p = {r["url"]: r.asDict() for r in extract_documents(df, arrow=False, partitions=3).collect()}
-    assert set(a) == set(p) and len(a) == len(payloads)
-    for url in a:
-        assert a[url] == p[url], url
+    a = {
+        r["url"]: r.asDict(recursive=True)
+        for r in extract_documents(df, partitions=3).collect()
+    }
+    assert len(a) == len(payloads)
+    for i, payload in enumerate(payloads):
+        url = f"u{i}"
+        got = a[url]
+        text, status, fmt = extract_document_text(payload, "auto")
+        info = extract_info_from_text(text, url, "KP", "")
+        assert got["extracted_text"] == text, url
+        assert got["status"] == status, url
+        assert got["format"] == fmt, url
+        for field in ("data", "nadawca_odbiorca", "w_sprawie", "numer_dokumentu",
+                      "sygnatura_sprawy", "typ_dokumentu"):
+            assert got[field] == info[field], (url, field)
+        assert got["doc_status"] == info["status"], url
+        assert got["colors"] == info["colors"], url
+        assert got["spans"] == info_spans(text, info), url
+        assert got["n_chars"] == len(text), url
+        assert got["n_bytes"] == len(payload or b""), url
     # sanity on the content itself
     assert a["u4"]["format"] == "html" and "utf-16 dokument" in a["u4"]["extracted_text"]
     assert "Zażółć gęślą jaźń" in a["u5"]["extracted_text"]

@@ -25,11 +25,47 @@ def test_extraction_is_map_only_and_pruned(spark, tmp_path):
     corpus_df(spark, 50, seed=2, partitions=2).write.mode("overwrite").parquet(path)
     plan = plan_of(extract_documents(spark.read.parquet(path)))
     assert "Exchange" not in plan, "extraction must not shuffle the payload"
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     # ground-truth text column pruned from the scan
     assert "ReadSchema" in plan
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l][0]
     assert "text" not in read_schema.split("ReadSchema")[1]
     assert "html" in read_schema
+
+
+_PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
+
+
+def python_stages(plan: str) -> list[str]:
+    """The Python operators of a plan string, last stage first."""
+    return [
+        node
+        for line in plan.splitlines()
+        for node in _PYTHON_NODES
+        if line.lstrip(" +-:~").startswith(node)
+    ]
+
+
+def test_stream_extract_runs_the_arrow_stage(spark, tmp_path):
+    from archvisier_spark.corpus import corpus_df
+    from archvisier_spark.streaming.stream_extract import stream_extract
+
+    path = str(tmp_path / "corpus")
+    corpus_df(spark, 10, seed=2, partitions=1).write.parquet(path)
+    plan = stream_extract(spark, path)._jdf.queryExecution().logical().toString()
+    assert python_stages(plan) == ["MapInArrow"], plan
+
+
+def test_paged_extraction_ends_in_the_arrow_stage(spark, tmp_path):
+    """The paged path's cascade stage is the extraction stage's row builder
+    (split and OCR stages stay pandas: they have no twin)."""
+    from archvisier_spark.corpus import corpus_df
+    from archvisier_spark.pipeline.paged import extract_documents_paged
+
+    path = str(tmp_path / "corpus")
+    corpus_df(spark, 10, seed=2, partitions=1).write.parquet(path)
+    plan = plan_of(extract_documents_paged(spark.read.parquet(path)))
+    assert python_stages(plan)[0] == "MapInArrow", plan
 
 
 def test_pricing_summary_partial_aggregation(spark):

@@ -36,12 +36,13 @@ def test_stream_extract_equals_batch(spark, tmp_path):
         name,
         str(tmp_path / "ckpt"),
     )
+    # whole rows: spans, colors, extra, n_bytes and warc_ts included
     streamed = {
-        r["url"]: (r["extracted_text"], r["status"], r["typ_dokumentu"])
+        r["url"]: r.asDict(recursive=True)
         for r in spark.sql(f"SELECT * FROM {name}").collect()
     }
     batch = {
-        r["url"]: (r["extracted_text"], r["status"], r["typ_dokumentu"])
+        r["url"]: r.asDict(recursive=True)
         for r in extract_documents(spark.read.parquet(corpus_path)).collect()
     }
     assert streamed == batch
