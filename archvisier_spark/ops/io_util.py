@@ -1,59 +1,16 @@
-"""Scan-split sizing for the ops tables (optimization round r07).
+"""Reader for the driver's relational tables.
 
-The session default for ``spark.sql.files.maxPartitionBytes`` is 1 MB —
-the right granularity for the extraction corpus, whose map-only stage
-inherits task width from input splits and needs multiple waves per core
-(see ``archvisier_spark.session``).  The driver's relational tables are
-the opposite shape: single parquet files whose useful scan parallelism
-is bounded by their ROW-GROUP count, so 1 MB splits only manufacture
-empty tasks (a 132 MB lineitem file becomes ~126 scheduled tasks of
-which 6 read a row group — ~0.12 s of pure task-launch overhead per
-scan at local[32]).
-
-``read_table`` sets a scale-adaptive split size before building the
-scan: ``clamp(file_size / (4 × cores), 16 MB, 1 GB)`` — at local scale
-that floors at 16 MB (≈ one split per row group of these files); at
-cluster scale it grows toward the guide's 512 MB–1 GB large-scan range
-(§6), keeping ~4 task waves per core.  The conf is re-read at execution
-time, and ``extract_documents`` pins its own 1 MB value at call time,
-so interleaved extraction/ops workloads each run with their intended
-granularity.
+Split sizing is the session's one planner rule (``archvisier_spark.
+session``), applied per scan: a table file of up to 16 MB plans one
+split, so a scan schedules no empty tasks for a file whose parallelism
+is its row groups.  The reader sets no conf.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-_FLOOR = 16 << 20
-_CEIL = 1 << 30
-
-
-def split_bytes_for(size: int, cores: int) -> int:
-    return min(max(size // max(4 * cores, 1), _FLOOR), _CEIL)
-
-
-def _path_size(path: str) -> int:
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    try:
-        return os.path.getsize(path)
-    except OSError:
-        return 0
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read ``{sf_dir}/{name}.parquet`` with an ops-appropriate split size."""
-    path = f"{sf_dir}/{name}.parquet"
-    size = _path_size(path)
-    if size:
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes",
-            str(split_bytes_for(size, spark.sparkContext.defaultParallelism)),
-        )
-    return spark.read.parquet(path)
+    """Read ``{sf_dir}/{name}.parquet``."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -232,11 +232,12 @@ def extract_documents(
     **Map-only**: the extraction UDF runs directly on the scan partitions, so the megabyte payload column never
     crosses a shuffle — measured on this box, feeding Arrow batches out of
     shuffle files anti-scales (32 threads 2.5× slower than 8), while
-    scan-fed batches scale cleanly.  Balance then comes from input splits:
-    size-based (``spark.sql.files.maxPartitionBytes``), which is exactly
-    the right granularity for byte-skewed documents.  Writers of the input
-    table control split width; the corpus generator and lineage chunks
-    both emit fine-grained files.
+    scan-fed batches scale cleanly.  Balance then comes from input splits,
+    sized by the session's one planner rule (``archvisier_spark.session``:
+    about ``4 × cores`` splits per scan, whole small files packed
+    together), which is the right granularity for byte-skewed documents.
+    Writers of the input table control file width; the corpus generator
+    and lineage chunks both emit fine-grained files.
 
     ``paged_threshold``: optionally route payloads above this many bytes
     through page-level parallelism (pipeline/paged.py) — the answer for
@@ -257,17 +258,6 @@ def extract_documents(
     task failure.
     Returns EXTRACT_SCHEMA.
     """
-    spark = df.sparkSession
-    # r07: pin the extraction split size at call time.  Scan partitioning
-    # is decided from the session conf AT EXECUTION, and the ops table
-    # reader (ops/io_util.read_table) legitimately raises the split size
-    # for row-group-bound relational scans — an interleaved workload
-    # (bench.py alternates extraction and ops queries) must not leak that
-    # coarse setting into the split-fed map-only extraction stage, whose
-    # multi-wave task granularity comes entirely from 1 MB splits.
-    from archvisier_spark.session import MAX_PARTITION_BYTES
-
-    spark.conf.set("spark.sql.files.maxPartitionBytes", MAX_PARTITION_BYTES)
     # optional transport-layer charset column (WARC Content-Type header):
     # propagated into the decode when the table carries it
     has_ct = "content_type" in df.columns
@@ -287,6 +277,7 @@ def extract_documents(
         extract_documents_paged(
             huge, language=language, work_mode=work_mode,
             case_signature=case_signature, partitions=partitions,
+            entity_rules=entity_rules, llm_tier=llm_tier,
             ocr_mode=ocr_mode, ocr_engine=ocr_engine,
         )
     )

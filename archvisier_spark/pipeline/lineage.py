@@ -121,18 +121,10 @@ def run_resumable(
     ).withColumn("chunk_id", chunk_id_col(F.col("url"), n_chunks))
 
     # Idempotent chunk replacement (parquet stand-in for Iceberg MERGE):
-    # only the partitions present in `result` are overwritten.  The conf is
-    # scoped to this write — session-wide "dynamic" would silently change
-    # the semantics of every later overwrite in the same session.
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        result.write.mode("overwrite").partitionBy("chunk_id").parquet(output_path)
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    # only the partitions present in `result` are overwritten.  The mode is
+    # a writer option, so the session's overwrite semantics never change.
+    (result.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("chunk_id").parquet(output_path))
 
     # Lineage rows are derived from what was actually WRITTEN, not from the
     # input — the audit trail reflects durable output.

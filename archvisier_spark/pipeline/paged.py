@@ -219,10 +219,15 @@ def extract_documents_paged(
     work_mode: str = "KP",
     case_signature: str = "",
     partitions: int | None = None,
+    entity_rules=None,
+    llm_tier=None,
     ocr_mode: str = "text",
     ocr_engine=None,
 ) -> DataFrame:
     """EXTRACT_SCHEMA output via page-level parallelism (heavy-doc path).
+
+    ``entity_rules`` and ``llm_tier`` configure the cascade tiers exactly
+    as in ``extract_documents``.
 
     ``ocr_mode="raster"``: the split stage rasterises pages (payload in
     hand), rasters fan out across tasks, and the expensive OCR + repair
@@ -317,5 +322,5 @@ def extract_documents_paged(
         )
     )
 
-    fn = make_metadata_arrow(work_mode, case_signature)
+    fn = make_metadata_arrow(work_mode, case_signature, entity_rules, llm_tier)
     return assembled.repartition(n_parts, "url").mapInArrow(fn, EXTRACT_SCHEMA)

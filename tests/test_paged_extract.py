@@ -66,3 +66,24 @@ def test_paged_multipage_order_preserved(spark):
     assert text == extract_documents(docs).collect()[0]["extracted_text"]
     assert text.splitlines()[0] == "strona numer 0 akapit dokumentu"
     assert text.splitlines()[24] == "strona numer 24 akapit dokumentu"
+
+
+ENTITY_RULES = (
+    ("ORGANIZACJA", "Urząd Miasta"),
+    ("DATA", "June 15, 2024"),
+    ("TYTUL_PISMA", "dostawy gazu"),
+    ("SYGNATURA_SPRAWY", "VII K 123/20"),
+)
+
+
+def test_paged_branch_keeps_the_entity_tier(spark):
+    """The same documents give the same rows below and above
+    ``paged_threshold`` when a RuleNer rule set is configured."""
+    docs = corpus_df(spark, 40, seed=7, skew_every=7, skew_factor=10, partitions=4)
+    below = _by_url(extract_documents(docs, partitions=4, entity_rules=ENTITY_RULES,
+                                      paged_threshold=1 << 40))
+    above = _by_url(extract_documents(docs, partitions=4, entity_rules=ENTITY_RULES,
+                                      paged_threshold=0))
+    # the rules change some rows, so a branch that dropped them would differ
+    assert below != _by_url(extract_documents(docs, partitions=4))
+    assert above == below

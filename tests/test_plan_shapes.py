@@ -33,6 +33,36 @@ def test_extraction_is_map_only_and_pruned(spark, tmp_path):
     assert "html" in read_schema
 
 
+def test_multi_file_corpus_plans_one_split_per_file(spark, tmp_path):
+    """Sixteen small corpus files under the session's planner rule
+    (minPartitionNum = 4 × cores = 16 on local[4], openCostInBytes as
+    each file's weight): one scan task per file, fed straight into the
+    map-only extraction stage."""
+    from archvisier_spark.corpus import corpus_df
+    from archvisier_spark.pipeline.extract import extract_documents
+
+    path = str(tmp_path / "corpus")
+    corpus_df(spark, 400, seed=2, partitions=16).write.parquet(path)
+    n_files = len(list((tmp_path / "corpus").glob("*.parquet")))
+    assert n_files == 16
+    assert int(spark.conf.get("spark.sql.files.minPartitionNum")) == (
+        4 * spark.sparkContext.defaultParallelism)
+    out = extract_documents(spark.read.parquet(path))
+    assert "Exchange" not in plan_of(out)
+    assert out.rdd.getNumPartitions() == n_files
+
+
+@pytest.mark.parametrize("table", ["region", "nation", "customer", "supplier", "part",
+                                   "orders", "lineitem", "events", "documents",
+                                   "embeddings"])
+def test_ops_table_scan_plans_one_split(spark, table):
+    """Every sf0.01 table is one file with one row group: more than one
+    split would only schedule empty tasks."""
+    from archvisier_spark.ops.io_util import read_table
+
+    assert read_table(spark, "/root/testdata/sf0.01", table).rdd.getNumPartitions() == 1
+
+
 _PYTHON_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython")
 
 
@@ -86,6 +116,19 @@ def test_dimension_joins_are_broadcast(spark):
     plan = plan_of(q_nation_revenue(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+
+
+def test_shuffle_hash_hint_carries_nation_revenue(spark):
+    """The lineitem ⋈ orders shuffled-hash join comes from the query's own
+    hint, not from session-wide join settings."""
+    from archvisier_spark.ops.tpch import q_nation_revenue
+
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "true"
+    df = q_nation_revenue(spark, "/root/testdata/sf0.01")
+    df.collect()
+    plan = plan_of(df)
+    assert "isFinalPlan=true" in plan
+    assert "ShuffledHashJoin" in plan
 
 
 def test_filter_pushdown_reaches_scan(spark):
