@@ -59,10 +59,6 @@ def main(argv: list[str] | None = None) -> int:
                         "workbook (the reference's export artifact, "
                         "pdf_processor_app.py:1023-1122) via the from-scratch "
                         "stdlib OOXML writer")
-    p.add_argument("--assume-sorted-urls", action="store_true",
-                   help="input/output is stored sorted by url (Iceberg sort "
-                        "order): numbering skips the payload re-attach join "
-                        "(zero-shuffle fast path; fails fast if unsorted)")
     args = p.parse_args(argv)
     if args.export_xlsx and not args.finalize:
         # a silently ignored export is worse than a crash: the workbook
@@ -117,8 +113,7 @@ def main(argv: list[str] | None = None) -> int:
     }
 
     if args.finalize and len(done) == args.n_chunks:
-        named = finalize_names(spark, args.output, work_mode=args.work_mode,
-                               assume_sorted=args.assume_sorted_urls)
+        named = finalize_names(spark, args.output, work_mode=args.work_mode)
         named.write.mode("overwrite").parquet(args.output.rstrip("/") + "_named")
         report["finalized_rows"] = spark.read.parquet(
             args.output.rstrip("/") + "_named"

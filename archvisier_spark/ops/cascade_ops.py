@@ -1,10 +1,12 @@
 """Kernel-backed operators over the driver tables.
 
-These run the byte-parity kernel inside Arrow-batched pandas UDFs — the
-operators whose Python-``re``/multiset semantics deliberately do NOT get
-translated to JVM regex (SURVEY.md §7 "regex engine parity").  Where exact
-SQL parity IS expressible (C-multiset token Jaccard), a computed oracle is
-provided; the cascade itself gets a PINNED-LITERAL oracle (the expected
+These run the byte-parity kernel in Python — the cascade on the
+extraction pipeline's own ``mapInArrow`` metadata stage
+(:func:`~archvisier_spark.pipeline.extract.with_metadata`), the rest inside
+Arrow-batched pandas UDFs — the operators whose Python-``re``/multiset
+semantics deliberately do NOT get translated to JVM regex (SURVEY.md §7
+"regex engine parity").  Where exact SQL parity IS expressible
+(C-multiset token Jaccard), a computed oracle is provided; the cascade itself gets a PINNED-LITERAL oracle (the expected
 output over the deterministic corpus, computed driver-side with the same
 byte-parity kernel and embedded as VALUES — see
 :func:`_cascade_metadata_oracle_sql`), with byte-identity additionally
@@ -19,18 +21,11 @@ from pyspark.sql import functions as F, types as T
 from archvisier_spark.kernel.cascade import extract_info_from_text
 from archvisier_spark.kernel.smart import find_document_type
 from archvisier_spark.kernel.textfix import correct_text
+from archvisier_spark.pipeline.extract import with_metadata
 
-INFO_SCHEMA = T.StructType(
-    [
-        T.StructField("data", T.StringType(), False),
-        T.StructField("nadawca_odbiorca", T.StringType(), False),
-        T.StructField("w_sprawie", T.StringType(), False),
-        T.StructField("numer_dokumentu", T.StringType(), False),
-        T.StructField("sygnatura_sprawy", T.StringType(), False),
-        T.StructField("typ_dokumentu", T.StringType(), False),
-        T.StructField("doc_status", T.StringType(), False),
-    ]
-)
+# q_cascade_metadata's columns after doc_id
+INFO_COLUMNS = ("data", "nadawca_odbiorca", "w_sprawie", "numer_dokumentu",
+                "sygnatura_sprawy", "typ_dokumentu", "doc_status")
 
 
 # Deterministic entity rules over the synthetic corpus vocabulary — the
@@ -43,29 +38,6 @@ DOC_ENTITY_RULES = (
     ("TYTUL_PISMA", "spark window"),
     ("TYP_DOKUMENTU", "merge"),
 )
-
-
-@F.pandas_udf(INFO_SCHEMA)
-def cascade_udf(texts: pd.Series) -> pd.DataFrame:
-    from archvisier_spark.kernel.ner import RuleNer
-
-    provider = RuleNer(DOC_ENTITY_RULES)
-    rows = []
-    for text in texts:
-        info = extract_info_from_text(text or "", "", "KP", "",
-                                      entity_provider=provider)
-        rows.append(
-            {
-                "data": info["data"],
-                "nadawca_odbiorca": info["nadawca_odbiorca"],
-                "w_sprawie": info["w_sprawie"],
-                "numer_dokumentu": info["numer_dokumentu"],
-                "sygnatura_sprawy": info["sygnatura_sprawy"],
-                "typ_dokumentu": info["typ_dokumentu"],
-                "doc_status": info["status"],
-            }
-        )
-    return pd.DataFrame(rows)
 
 
 @F.pandas_udf(T.StringType())
@@ -89,10 +61,11 @@ def q_cascade_metadata(spark, sf_dir):
     # shuffle + per-task Python overhead than the single-task cascade
     # (count 0.14→0.23 s, noop 0.36→0.61 s at sf1.0) — left map-only.
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 500)
-    return (
-        docs.select("doc_id", cascade_udf("text").alias("info"))
-        .select("doc_id", "info.*")
-    )
+    return with_metadata(
+        docs.select("doc_id", F.lit("").alias("url"),
+                    F.coalesce("text", F.lit("")).alias("extracted_text")),
+        entity_rules=DOC_ENTITY_RULES,
+    ).select("doc_id", *INFO_COLUMNS)
 
 
 # FNV-1a 64-bit offset basis, reinterpreted as signed i64 (the seed of the

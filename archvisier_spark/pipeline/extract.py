@@ -99,6 +99,8 @@ _INFO_FIELDS = ("data", "nadawca_odbiorca", "w_sprawie", "numer_dokumentu",
 # keys of the fixed info record — anything else in the cascade output is a
 # dynamic extra (overflow MAP column)
 _CORE_INFO_KEYS = frozenset((*_INFO_FIELDS, "status", "colors"))
+# the columns _append_metadata fills, in EXTRACT_SCHEMA order
+_METADATA_NAMES = [*_INFO_FIELDS, "doc_status", "colors", "extra", "spans", "n_chars"]
 
 
 def _build_provider(entity_rules):
@@ -143,11 +145,11 @@ def _arrow_types() -> dict:
     return {f.name: to_arrow_type(f.dataType) for f in EXTRACT_SCHEMA.fields}
 
 
-def _record_batch(batch, cols: dict):
-    """The EXTRACT_SCHEMA output batch.  Every output column the input
-    batch already carries passes through as the input's own Arrow buffer
-    (zero-copy, timestamp tz metadata untouched); every other column is
-    built from the accumulators."""
+def _record_batch(batch, cols: dict, names: list[str]):
+    """The output batch with columns ``names``.  Every output column the
+    input batch already carries passes through as the input's own Arrow
+    buffer (zero-copy, timestamp tz metadata untouched); every other
+    column is built from the accumulators."""
     import pyarrow as pa
 
     carried = set(batch.schema.names)
@@ -155,9 +157,9 @@ def _record_batch(batch, cols: dict):
     return pa.RecordBatch.from_arrays(
         [
             batch.column(n) if n in carried else pa.array(cols[n], type=types[n])
-            for n in _FIELD_NAMES
+            for n in names
         ],
-        names=_FIELD_NAMES,
+        names=names,
     )
 
 
@@ -193,15 +195,19 @@ def make_extract_arrow(language: str, work_mode: str, case_signature: str,
                 cols["status"].append(status)
                 cols["n_bytes"].append(len(payload) if payload else 0)
                 _append_metadata(cols, text, url, cascade)
-            yield _record_batch(batch, cols)
+            yield _record_batch(batch, cols, _FIELD_NAMES)
 
     return extract_batches
 
 
-def make_metadata_arrow(work_mode: str, case_signature: str, entity_rules=None,
-                        llm_tier=None):
-    """The mapInArrow stage over rows whose text is ALREADY extracted
-    (page-parallel path): runs only the cascade + spans."""
+def with_metadata(df: DataFrame, work_mode: str = "KP", case_signature: str = "",
+                  entity_rules=None, llm_tier=None) -> DataFrame:
+    """The cascade stage over rows whose text is ALREADY extracted: reads
+    ``url`` and ``extracted_text`` and appends the metadata columns
+    (``data`` … ``typ_dokumentu``, ``doc_status``, ``colors``, ``extra``,
+    ``spans``, ``n_chars``) in one mapInArrow.  Every input column goes
+    back out as its own Arrow buffer; the input must carry none of the
+    metadata column names and no null ``extracted_text``."""
     cascade = _cascade(work_mode, case_signature, entity_rules, llm_tier)
 
     def metadata_batches(batches):
@@ -210,9 +216,12 @@ def make_metadata_arrow(work_mode: str, case_signature: str, entity_rules=None,
             for url, text in zip(batch.column("url").to_pylist(),
                                  batch.column("extracted_text").to_pylist()):
                 _append_metadata(cols, text, url, cascade)
-            yield _record_batch(batch, cols)
+            yield _record_batch(batch, cols, batch.schema.names + _METADATA_NAMES)
 
-    return metadata_batches
+    schema = T.StructType(
+        [*df.schema.fields, *(EXTRACT_SCHEMA[n] for n in _METADATA_NAMES)]
+    )
+    return df.mapInArrow(metadata_batches, schema)
 
 
 def extract_documents(
@@ -357,7 +366,6 @@ def with_new_names(
     extracted: DataFrame,
     work_mode: str = "KP",
     keys_df: DataFrame | None = None,
-    assume_sorted: bool = False,
 ) -> DataFrame:
     """Append ``lp`` (counter semantics, A2) and ``new_name`` (X14).
 
@@ -370,35 +378,19 @@ def with_new_names(
     extraction is 1-row-in→1-row-out, so input urls number the output —
     and the counting pre-pass then reads ONE pruned parquet column instead
     of re-running the extraction UDF.
-
-    ``assume_sorted``: the table is stored sorted by url (Iceberg url
-    sort order) — numbering then skips the payload re-attach join
-    entirely (``with_sequence_sorted``: offsets + in-partition record
-    index, zero payload Exchange).  The work_mode counter restart is
-    vacuous here (one constant mode per run), so the ungrouped fast path
-    is exact.  Raises ``ValueError`` if the claimed sort order doesn't
-    hold.
     """
-    if assume_sorted:
-        from archvisier_spark.pipeline.numbering import with_sequence_sorted
-
-        numbered = with_sequence_sorted(
-            extracted, order_col="url", out_col="lp", keys_df=keys_df
-        ).withColumn("work_mode", F.lit(work_mode))
-    else:
-        keys = (
-            keys_df.select("url").withColumn("work_mode", F.lit(work_mode))
-            if keys_df is not None
-            else None
-        )
-        numbered = with_sequence(
-            extracted.withColumn("work_mode", F.lit(work_mode)),
-            order_col="url",
-            partition_cols=("work_mode",),
-            out_col="lp",
-            keys_df=keys,
-        )
-
+    keys = (
+        keys_df.select("url").withColumn("work_mode", F.lit(work_mode))
+        if keys_df is not None
+        else None
+    )
+    numbered = with_sequence(
+        extracted.withColumn("work_mode", F.lit(work_mode)),
+        order_col="url",
+        partition_cols=("work_mode",),
+        out_col="lp",
+        keys_df=keys,
+    )
     return numbered.withColumn("new_name", new_name_col())
 
 

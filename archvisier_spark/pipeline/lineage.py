@@ -38,8 +38,6 @@ from archvisier_spark.pipeline.extract import (
     display_number_col,
     extract_documents,
     new_name_col,
-    with_display_numbers,
-    with_new_names,
 )
 from archvisier_spark.pipeline.numbering import with_sequences
 
@@ -144,23 +142,14 @@ def run_resumable(
 
 def finalize_names(
     spark: SparkSession, output_path: str, work_mode: str = "KP",
-    assume_sorted: bool = False,
 ) -> DataFrame:
     """Global numbering + naming over the completed chunk output, plus the
     year-scoped display number: the flagship output ships ``lp`` /
     ``new_name`` (X13/X14) AND ``lp_year`` / ``display_number`` — the
     reference's ``{mode}/{year}`` session counters rendered with the
     TYPE_PATTERNS literals (gui/constants.py:9-13) — not just the oracle
-    query's view of them.
-
-    ``assume_sorted``: the chunk output is stored url-sorted (an Iceberg
-    url sort order) — numbering then takes the zero-payload-shuffle path
-    (pipeline/numbering.with_sequence_sorted); raises ``ValueError`` if
-    the claimed order doesn't hold."""
+    query's view of them."""
     output = spark.read.parquet(output_path).drop("chunk_id")
-    if assume_sorted:
-        named = with_new_names(output, work_mode=work_mode, assume_sorted=True)
-        return with_display_numbers(named, work_mode=work_mode)
     # lp and lp_year are both dense ranks in url order: one key slice,
     # one counts collect and one payload join number them together
     numbered = with_sequences(

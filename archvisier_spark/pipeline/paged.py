@@ -36,7 +36,7 @@ from archvisier_spark.kernel.document import (
 from archvisier_spark.kernel.pdf import pdf_page_count, pdf_page_texts
 from archvisier_spark.kernel.sniffer import FORMAT_PDF, sniff_format
 from archvisier_spark.kernel.textfix import correct_text, detect_lang
-from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, make_metadata_arrow
+from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, with_metadata
 
 # page_idx >= 0: a raw PDF page awaiting repair; page_idx == -1: a document
 # already fully extracted in the split stage (errors, HTML, plain text).
@@ -322,5 +322,7 @@ def extract_documents_paged(
         )
     )
 
-    fn = make_metadata_arrow(work_mode, case_signature, entity_rules, llm_tier)
-    return assembled.repartition(n_parts, "url").mapInArrow(fn, EXTRACT_SCHEMA)
+    return with_metadata(
+        assembled.repartition(n_parts, "url"), work_mode, case_signature,
+        entity_rules, llm_tier,
+    ).select(*EXTRACT_SCHEMA.fieldNames())

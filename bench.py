@@ -88,8 +88,10 @@ def run_extraction(spark) -> tuple[float, float, int]:
     extract_sec = time.time() - t0
     t0 = time.time()
     # keys_df: numbering pre-pass reads the pruned url column, so the
-    # extraction UDF runs exactly once
-    with_new_names(extract_documents(docs), work_mode="KP", keys_df=docs).count()
+    # extraction UDF runs exactly once.  A noop sink, not count(): column
+    # pruning would drop the naming UDF from a count's plan
+    with_new_names(extract_documents(docs), work_mode="KP", keys_df=docs).write.format(
+        "noop").mode("overwrite").save()
     return extract_sec, time.time() - t0, n
 
 

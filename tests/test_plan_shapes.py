@@ -98,6 +98,19 @@ def test_paged_extraction_ends_in_the_arrow_stage(spark, tmp_path):
     assert python_stages(plan)[0] == "MapInArrow", plan
 
 
+@pytest.mark.parametrize("name", ["entry", "cascade_metadata"])
+def test_text_in_cascade_runs_the_arrow_stage(spark, name):
+    """The flagship and cascade_metadata run the cascade in the extraction
+    pipeline's metadata stage: one MapInArrow, no pandas twin.  The
+    flagship's naming UDF is its only other Python node."""
+    import __spark_entry__ as entry_mod
+    from archvisier_spark.ops.cascade_ops import q_cascade_metadata
+
+    df = entry_mod.entry(spark) if name == "entry" else q_cascade_metadata(spark, SF_DIR)
+    plan = "\n".join(l for l in plan_of(df).splitlines() if "name_udf" not in l)
+    assert python_stages(plan) == ["MapInArrow"], plan
+
+
 def test_pricing_summary_partial_aggregation(spark):
     from archvisier_spark.ops.tpch import q_pricing_summary
 

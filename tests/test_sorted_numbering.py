@@ -118,13 +118,17 @@ def test_empty_input_gets_null_lp(spark):
     assert dict(out.dtypes)["lp"] == "bigint"
 
 
-def test_with_new_names_assume_sorted_matches_default(spark, tmp_path):
-    """End-to-end flagship parity: extraction + numbering + naming over a
-    url-sorted corpus must produce identical (lp, new_name) under both
-    numbering strategies."""
+def test_sorted_path_numbers_extraction_output_like_default(spark, tmp_path):
+    """End-to-end flagship parity: over the extraction output of a
+    url-sorted corpus, the sorted fast path (keyed by the raw scan) gives
+    the same (lp, new_name) as with_new_names' two-phase rank."""
 
     from archvisier_spark.corpus import corpus_df
-    from archvisier_spark.pipeline.extract import extract_documents, with_new_names
+    from archvisier_spark.pipeline.extract import (
+        extract_documents,
+        new_name_col,
+        with_new_names,
+    )
 
     base = corpus_df(spark, 60, seed=11, partitions=3).toPandas()
     base = base.sort_values("url").reset_index(drop=True)
@@ -136,8 +140,11 @@ def test_with_new_names_assume_sorted_matches_default(spark, tmp_path):
     spark.createDataFrame(base).coalesce(1).sortWithinPartitions("url").write.parquet(path)
     docs = spark.read.parquet(path)
     ext = extract_documents(docs)
-    fast = with_new_names(ext, keys_df=docs, assume_sorted=True)
+    fast = with_sequence_sorted(ext, "url", keys_df=docs).withColumn(
+        "new_name", new_name_col()
+    )
     slow = with_new_names(ext, keys_df=docs)
     f = {r["url"]: (r["lp"], r["new_name"]) for r in fast.collect()}
     s = {r["url"]: (r["lp"], r["new_name"]) for r in slow.collect()}
     assert f == s
+    assert sorted(lp for lp, _ in f.values()) == list(range(1, 61))
