@@ -12,14 +12,13 @@ executed inside Arrow-batched pandas UDFs, never translated to
 
 from __future__ import annotations
 
-import os
 import re
 
-# Escape hatch for the scaling-frontier measurement (BENCH/BASELINE.md):
-# disabling the substring pre-gates lowers per-document compute density
-# WITHOUT changing any result — the knob that lets anyone reproduce both
-# points of the throughput-vs-single-box-efficiency frontier.
-GATES_ENABLED = os.environ.get("SPARK_GRAFT_DISABLE_GATES") != "1"
+# The substring pre-gates skip scans that cannot match; they never change
+# a result.  Turning this flag off (read at call time here and in
+# cascade.py) runs every scan ungated — the reference the tests compare
+# the gated extractors against.
+GATES_ENABLED = True
 
 # Keyword -> canonical document type, scanned in insertion order.
 # Mirrors smart_extractor.py:26-67 (34 multilingual keywords).

@@ -14,14 +14,16 @@ S10); at 10^12 documents the equivalent is range-level bookkeeping:
   output tables; the parquet implementation here has the same idempotence
   contract and is what the sandbox can execute;
 * every completed chunk appends one lineage row
-  ``(chunk_id, n_docs, n_bytes, n_errors, checksum, status)`` where
-  ``checksum`` is an order-independent content digest
+  ``(chunk_id, n_docs, n_bytes, n_errors, checksum, status, run_id,
+  n_chunks)`` where ``checksum`` is an order-independent content digest
   (bit_xor of xxhash64(url, extracted_text)) — enough to audit that a resumed
   run reproduced exactly the bytes a single-shot run would have.
 
 The checkpoint is read once per :func:`run_resumable` call: one collect
-of ``(chunk_id, status, run_id)`` yields both the done set and the next
-run id.
+of ``(chunk_id, status, run_id, n_chunks)`` yields the done set, the next
+run id and the chunk counts earlier runs used.  The same chunk id
+covers another url set under another ``n_chunks``, so a resume with a
+different count is refused rather than writing documents twice.
 
 Numbering (``lp``/``new_name``) is global across chunks, so it is applied
 by :func:`finalize_names` once all chunks are complete — it is a pure
@@ -54,30 +56,39 @@ def _read_checkpoint(spark: SparkSession, checkpoint_path: str) -> DataFrame:
     unions old and new parquet footers (a plain read may sample only an
     old footer and drop the column), and rows appended before the
     ``run_id`` column existed surface as ``run_id = -1`` — older than any
-    real run, so recency ordering stays correct."""
+    real run, so recency ordering stays correct.  Rows appended before
+    the ``n_chunks`` column existed read it as null."""
     lin = spark.read.option("mergeSchema", "true").parquet(checkpoint_path)
+    if "n_chunks" not in lin.columns:
+        lin = lin.withColumn("n_chunks", F.lit(None).cast("int"))
     if "run_id" not in lin.columns:
         return lin.withColumn("run_id", F.lit(-1))
     return lin.withColumn("run_id", F.coalesce(F.col("run_id"), F.lit(-1)))
 
 
-def _checkpoint_state(spark: SparkSession, checkpoint_path: str) -> tuple[set[int], int]:
-    """``(done chunk ids, next run id)`` from ONE read of the checkpoint.
+def _checkpoint_state(
+    spark: SparkSession, checkpoint_path: str,
+) -> tuple[set[int], int, set[int]]:
+    """``(done chunk ids, next run id, recorded chunk counts)`` from ONE
+    read of the checkpoint.
 
     The run id is a monotonic counter derived from the checkpoint itself —
     the lineage analog of an Iceberg snapshot id, so "latest row per
-    chunk" means recency, not max-docs.  The collect is one row per chunk
-    per run: tiny by design.  A missing checkpoint means nothing is done."""
+    chunk" means recency, not max-docs.  The chunk counts skip rows
+    written before ``n_chunks`` was recorded.  The collect is one row per
+    chunk per run: tiny by design.  A missing checkpoint means nothing is
+    done."""
     try:
         rows = (
             _read_checkpoint(spark, checkpoint_path)
-            .select("chunk_id", "status", "run_id")
+            .select("chunk_id", "status", "run_id", "n_chunks")
             .collect()
         )
     except AnalysisException:
-        return set(), 0
+        return set(), 0, set()
     done = {r["chunk_id"] for r in rows if r["status"] == STATUS_OK}
-    return done, max((r["run_id"] for r in rows), default=-1) + 1
+    counts = {r["n_chunks"] for r in rows if r["n_chunks"] is not None}
+    return done, max((r["run_id"] for r in rows), default=-1) + 1, counts
 
 
 def completed_chunks(spark: SparkSession, checkpoint_path: str) -> set[int]:
@@ -101,9 +112,18 @@ def run_resumable(
     ``max_chunks_per_run`` bounds one invocation (used by tests to simulate
     a job dying partway; operationally it bounds blast radius per retry).
     Safe to re-run after any failure: finished chunks are skipped via the
-    lineage table, half-written chunks are overwritten whole.
+    lineage table, half-written chunks are overwritten whole.  Raises
+    ``ValueError`` if the checkpoint was written with another
+    ``n_chunks``: its chunk ids name other url sets, so resuming would
+    write some documents twice.
     """
-    done, run_id = _checkpoint_state(spark, checkpoint_path)
+    done, run_id, counts = _checkpoint_state(spark, checkpoint_path)
+    if counts - {n_chunks}:
+        raise ValueError(
+            f"checkpoint {checkpoint_path} was written with n_chunks="
+            f"{sorted(counts)}, this run asks for n_chunks={n_chunks}; resume "
+            "with the checkpoint's count or start a new output and checkpoint"
+        )
     todo = sorted(set(range(n_chunks)) - done)
     if max_chunks_per_run is not None:
         todo = todo[:max_chunks_per_run]
@@ -135,7 +155,8 @@ def run_resumable(
         F.sum((F.col("status") != "Sukces").cast("long")).alias("n_errors"),
         # bit_xor: order-independent, overflow-free under ANSI mode
         F.expr("bit_xor(xxhash64(url, extracted_text))").alias("checksum"),
-    ).withColumn("status", F.lit(STATUS_OK)).withColumn("run_id", F.lit(run_id))
+    ).withColumns({"status": F.lit(STATUS_OK), "run_id": F.lit(run_id),
+                   "n_chunks": F.lit(n_chunks)})
     lineage.write.mode("append").parquet(checkpoint_path)
     return todo
 

@@ -31,9 +31,9 @@ from pyspark.sql import SparkSession
 
 # Arrow transfer batch: 512 rows ≈ 1-4 MB for median web docs; a batch
 # containing one megabyte-scale PDF stays bounded because such rows are
-# ~1-per-hundred (SURVEY.md §4 "maxRecordsPerBatch tuned").  Overridable
-# for scaling experiments (larger batches amortise per-batch pipe+GIL
-# overhead at high worker counts; round-3 verdict #2).
+# ~1-per-hundred (SURVEY.md §4 "maxRecordsPerBatch tuned").  The env
+# override is the only way to shrink batches for a job.py raster run
+# (paged.py): this builder's own setting wins over spark-submit --conf.
 ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH_ROWS", "512"))
 
 
@@ -60,24 +60,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    # GC / JVM experiments (scaling A/Bs): local mode puts scan + Arrow
-    # serialisation for all N workers in ONE JVM, so collector choice can
-    # gate N-thread scaling in a way a per-executor JVM never sees
-    java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS")
-    if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
-    # Executor-JVM options (local-cluster scaling experiments): an
-    # UNcontainerized local-cluster executor sees all of the box's cores,
-    # so each of N executor JVMs sizes its GC/JIT thread pools for the
-    # whole machine — N × oversized service pools contending on one
-    # cpuset, an artifact a real cluster never has (cgroup limits make
-    # JVM ergonomics see the container's cores).  Passing
-    # -XX:ActiveProcessorCount=<executor cores> here renders the
-    # per-executor resource envelope a Kubernetes/YARN container would
-    # impose.  Experiments MUST use a distinct SPARK_GRAFT_SCALING_LABEL.
-    exec_java_opts = os.environ.get("SPARK_GRAFT_EXEC_JAVA_OPTS")
-    if exec_java_opts:
-        builder = builder.config("spark.executor.extraJavaOptions", exec_java_opts)
     # Master resolution: an explicit argument wins; otherwise inherit
     # spark.master from spark-submit / existing conf (cluster usage per
     # job.py --master help text); local[N] is only the last-resort default

@@ -1,25 +1,19 @@
 #!/usr/bin/env python
 """Benchmark harness — prints ONE JSON line with per-query seconds.
 
-Default mode (what the driver runs):
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 python bench.py
+    SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=<cores> python bench.py
 
 Headline: the flagship extraction pipeline (synthetic north-rule corpus,
 binary payloads → sniff → extract → cascade → number → name) measured as
 documents/sec, plus representative operator queries at the SF dir.
-
-Scaling mode (evidence for the N-vs-4N efficiency rule):
-    python bench.py --scaling
-runs the SAME extraction job at local[8] and local[32] in separate JVMs
-and writes BENCH/BASELINE.md with throughputs + efficiency.
+Per-layer, seeded and output-checked measurements live in ``perfbench/``
+(see perfbench/README.md).
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
-import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -34,8 +28,7 @@ CORPUS_SEED = 42
 SKEW_EVERY = 100
 SKEW_FACTOR = 500
 # zstd at rest: 3× smaller than snappy on this payload — the codec a real
-# 100 TB table would use, and measurably better 8→32 scaling (less DRAM
-# traffic per document, more CPU per byte moved)
+# 100 TB table would use
 CORPUS_CODEC = "zstd"
 CORPUS_PATH = (
     f"/tmp/archvisier_bench_corpus_n{N_DOCS}_s{CORPUS_SEED}"
@@ -75,10 +68,9 @@ def ensure_corpus(spark) -> str:
 def run_extraction(spark) -> tuple[float, float, int]:
     """One trial: (extraction-only sec, full-pipeline sec, docs).
 
-    Extraction-only is the SAME quantity the scaling protocol records
-    (runs.jsonl median32), so its in-bench samples pool with the series;
-    the full pipeline (extract → number → name) is the end-to-end figure
-    the extract_corpus query tracks round-over-round."""
+    Extraction-only is the ``extract_docs_per_sec`` headline; the full
+    pipeline (extract → number → name) is the end-to-end figure the
+    extract_corpus query tracks round-over-round."""
     from archvisier_spark.pipeline.extract import extract_documents, with_new_names
 
     path = ensure_corpus(spark)
@@ -93,39 +85,6 @@ def run_extraction(spark) -> tuple[float, float, int]:
     with_new_names(extract_documents(docs), work_mode="KP", keys_df=docs).write.format(
         "noop").mode("overwrite").save()
     return extract_sec, time.time() - t0, n
-
-
-def throughput_once(master: str) -> dict:
-    from archvisier_spark.pipeline.extract import extract_documents
-    from archvisier_spark.session import get_spark
-
-    spark = get_spark(master=master, app_name=f"bench_{master}")
-    if master.startswith("local-cluster"):
-        # real executor JVMs have no repo on sys.path — ship the package
-        # exactly as a cluster run would (spark-submit --py-files)
-        zip_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "dist", "engine.zip")
-        spark.sparkContext.addPyFile(zip_path)
-    docs = spark.read.parquet(ensure_corpus(spark))
-    # Warm-up at FULL parallelism: a 2% sample still touches every input
-    # split, so every Python worker is forked, imports the kernel, and
-    # JITs the scan before the clock starts.  The old limit(64) warm-up
-    # ran ONE task — the measured job then paid N worker cold-starts
-    # inside the timed region, charging local[32] 4× the startup of
-    # local[8] and biasing the scaling ratio downward.  Steady-state
-    # throughput is the honest regime: a real multi-hour 100 TB job pays
-    # per-executor startup once, not per-measurement.
-    extract_documents(docs.sample(fraction=0.02, seed=0)).count()
-    t0 = time.time()
-    n = extract_documents(docs).count()
-    extract_sec = time.time() - t0
-    spark.stop()
-    return {
-        "master": master,
-        "docs": n,
-        "extract_sec": extract_sec,
-        "extract_docs_per_sec": n / extract_sec,
-    }
 
 
 # 7 ops trials: at this VM's documented ±50% noise, 3 trials could not
@@ -170,10 +129,9 @@ def main_bench() -> None:
     for name in BENCH_OPS:
         samples[name] = []
 
-    # steady-state start, same rationale as the scaling protocol: a 2%
-    # full-parallelism sample forks every worker and imports the kernel
-    # so trial 1 doesn't carry N cold-starts (its median-inflating ~2×
-    # first-trial cost was pure startup, not pipeline)
+    # steady-state start: a 2% sample still touches every input split, so
+    # every Python worker is forked and imports the kernel before the
+    # clock starts, and trial 1 doesn't carry N worker cold-starts
     from archvisier_spark.pipeline.extract import extract_documents as _ed
 
     _ed(spark.read.parquet(ensure_corpus(spark)).sample(fraction=0.02, seed=0)).count()
@@ -205,772 +163,12 @@ def main_bench() -> None:
         "query_spread_sec": spread,
         "query_minmax_sec": minmax,
         "extract_docs": n_docs,
+        "extract_docs_per_sec": round(statistics.median(extract_only_rates), 1),
+        "pipeline_docs_per_sec": round(statistics.median(pipeline_rates), 1),
     }
-    # Headline throughput estimator (round-5 verdict #3): a 5-trial
-    # in-session median on a ±50%-noise shared VM is a small-sample
-    # artifact, so ``extract_docs_per_sec`` is the MEDIAN OVER A POOL of
-    # (a) this session's extraction-only trial rates and (b) the scaling
-    # series' per-run median32 values from BENCH/runs.jsonl ('current'
-    # label only — the single-config thread-mode series: local[32],
-    # steady-state warm-up, identical corpus).  Both sources measure the
-    # same quantity (extraction-only docs/s at 32 cores), and the pool
-    # spans hours of independent noise windows, which no single session
-    # can.  The per-source medians stay as secondary fields so the
-    # pooling is auditable; spread is the IQR over the pool.
-    runs_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH", "runs.jsonl")
-    hist32: list[float] = []
-    if os.path.exists(runs_path):
-        with open(runs_path) as rf:
-            hist32 = [
-                rec["median32"]
-                for rec in (json.loads(l) for l in rf if l.strip())
-                if rec.get("label", "current") == "current"
-            ]
-    # pooling is only valid when this session measured the SAME quantity
-    # the series protocol records: the protocol corpus (240 k docs,
-    # default seed/skew) at 32 cores.  A shrunken smoke corpus measures
-    # startup, and a different core count (SPARK_GRAFT_CPUS=8) is a
-    # different rate altogether — neither may contaminate the pool
-    # (round-6 review).
-    if N_DOCS == 240000 and CPUS == 32:
-        pool = extract_only_rates + hist32
-    else:
-        pool = list(extract_only_rates)
-    out["extract_docs_per_sec"] = round(statistics.median(pool), 1)
-    out["extract_pool_samples"] = len(pool)
-    out["extract_pool_iqr"] = round(_iqr(pool), 1)
-    out["extract_docs_per_sec_inbench"] = round(
-        statistics.median(extract_only_rates), 1
-    )
-    out["pipeline_docs_per_sec"] = round(statistics.median(pipeline_rates), 1)
-    if hist32:
-        out["scaling_series_extract_docs_per_sec_local32"] = round(
-            statistics.median(hist32), 1
-        )
-        out["scaling_series_runs"] = len(hist32)
     print(json.dumps(out))
     spark.stop()
 
 
-# --- megabyte-PDF skew worst case (round-5 verdict #7 stretch) ---
-# The bench corpus's ×500 skew docs REPEAT one content stream, which the
-# per-stream parse memo (kernel/pdf.py) makes cheap — the honest worst
-# case is a mega-PDF with DISTINCT pages: every stream parses, every page
-# runs the repair kernel.  The probe pits the default split-fed map-only
-# plan against the paged path (pipeline/paged.py) on a corpus where a few
-# such documents dominate total work, and records which strategy holds
-# the tail.
-SKEW_SMALL_DOCS = int(os.environ.get("SPARK_GRAFT_SKEW_SMALL", "64000"))
-SKEW_MEGA_DOCS = int(os.environ.get("SPARK_GRAFT_SKEW_MEGA", "2"))
-SKEW_MEGA_PAGES = int(os.environ.get("SPARK_GRAFT_SKEW_PAGES", "40000"))
-SKEW_PAGED_THRESHOLD = int(os.environ.get("SPARK_GRAFT_SKEW_THRESHOLD",
-                                          str(1 << 20)))
-SKEW_ROUNDS = int(os.environ.get("SPARK_GRAFT_SKEW_ROUNDS", "3"))
-SKEW_PROBE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH", "skew_probe.json")
-
-
-def _skew_probe_corpus(spark, path: str) -> None:
-    import datetime
-
-    from archvisier_spark.corpus import corpus_df
-    from archvisier_spark.kernel.pdf import build_pdf
-
-    small = corpus_df(spark, SKEW_SMALL_DOCS, seed=9, skew_every=0,
-                      partitions=128)
-    ts = datetime.datetime(2024, 1, 1)
-    mega_rows = []
-    for d in range(SKEW_MEGA_DOCS):
-        pages = [
-            [f"strona {p} dokumentu {d} zażółć treść pozycja {p * 7 + d}"]
-            for p in range(SKEW_MEGA_PAGES)
-        ]
-        mega_rows.append(
-            (f"warc://skew/mega-{d}", ts, build_pdf(pages), "", "pl")
-        )
-    mega = spark.createDataFrame(mega_rows, small.schema)
-    small.unionByName(mega).write.mode("overwrite").option(
-        "compression", CORPUS_CODEC
-    ).parquet(path)
-
-
-def main_skew_probe() -> None:
-    """Interleaved A/B: default split-fed plan vs the paged path on the
-    distinct-page mega-PDF corpus.  Writes BENCH/skew_probe.json (which
-    the --scaling BASELINE.md report embeds) and prints one JSON line."""
-    import statistics
-
-    from archvisier_spark.pipeline.extract import extract_documents
-    from archvisier_spark.session import get_spark
-
-    spark = get_spark(master=f"local[{CPUS}]", app_name="skew_probe")
-    path = (
-        f"/tmp/archvisier_skew_probe_s{SKEW_SMALL_DOCS}"
-        f"_m{SKEW_MEGA_DOCS}x{SKEW_MEGA_PAGES}_{CORPUS_CODEC}.parquet"
-    )
-    if not os.path.exists(path):
-        _skew_probe_corpus(spark, path)
-    docs = spark.read.parquet(path)
-    # steady-state warm-up, same rationale as the scaling protocol
-    extract_documents(docs.sample(fraction=0.02, seed=0)).count()
-    split_only: list[float] = []
-    paged: list[float] = []
-    for rnd in range(SKEW_ROUNDS):
-        order = [(split_only, {}), (paged, {"paged_threshold": SKEW_PAGED_THRESHOLD})]
-        if rnd % 2:
-            order.reverse()
-        for bucket, kw in order:
-            t0 = time.time()
-            extract_documents(docs, **kw).count()
-            bucket.append(time.time() - t0)
-    rec = {
-        "cpus": CPUS,
-        "small_docs": SKEW_SMALL_DOCS,
-        "mega_docs": SKEW_MEGA_DOCS,
-        "mega_pages": SKEW_MEGA_PAGES,
-        "paged_threshold": SKEW_PAGED_THRESHOLD,
-        "rounds": SKEW_ROUNDS,
-        "split_only_secs": [round(s, 2) for s in split_only],
-        "paged_secs": [round(s, 2) for s in paged],
-        "split_only_median_sec": round(statistics.median(split_only), 2),
-        "paged_median_sec": round(statistics.median(paged), 2),
-        "paged_over_split_ratio": round(
-            statistics.median(paged) / statistics.median(split_only), 3
-        ),
-    }
-    # create the ARTIFACT directory (script-relative), not a cwd-relative
-    # stray — the two differ when bench.py runs from another cwd
-    # (round-6 review)
-    os.makedirs(os.path.dirname(SKEW_PROBE_PATH), exist_ok=True)
-    # the probe file accumulates SHAPES (one record per corpus shape) so
-    # the crossover between split-fed and paged routing is visible in one
-    # table; re-running an existing shape replaces its record
-    probes: list[dict] = []
-    if os.path.exists(SKEW_PROBE_PATH):
-        with open(SKEW_PROBE_PATH) as f:
-            data = json.load(f)
-        probes = data.get("probes", [])
-    shape = ("small_docs", "mega_docs", "mega_pages")
-    probes = [p for p in probes if tuple(p[k] for k in shape)
-              != tuple(rec[k] for k in shape)]
-    probes.append(rec)
-    probes.sort(key=lambda p: p["mega_docs"] * p["mega_pages"])
-    with open(SKEW_PROBE_PATH, "w") as f:
-        json.dump({"probes": probes}, f, indent=1)
-    print(json.dumps(rec))
-    spark.stop()
-
-
-def _skew_probe_section() -> str:
-    """BASELINE.md paragraph for the recorded skew probes (empty string
-    until `bench.py --skew-probe` has run)."""
-    if not os.path.exists(SKEW_PROBE_PATH):
-        return ""
-    with open(SKEW_PROBE_PATH) as f:
-        data = json.load(f)
-    probes = data.get("probes", [])
-    if not probes:
-        return ""
-    def _winner(ratio: float) -> str:
-        if ratio < 0.9:
-            return "paged"
-        if ratio <= 1.1:
-            return "≈ even"
-        return "split-fed"
-
-    rows = "".join(
-        f"| {r['small_docs']} + {r['mega_docs']}×{r['mega_pages']}p | "
-        f"{', '.join(str(s) for s in r['split_only_secs'])} | "
-        f"{', '.join(str(s) for s in r['paged_secs'])} | "
-        f"{r['paged_over_split_ratio']} | "
-        f"{_winner(r['paged_over_split_ratio'])} |\n"
-        for r in probes
-    )
-    min_ratio = min(r["paged_over_split_ratio"] for r in probes)
-    crossover = min_ratio < 0.9
-    return (
-        "\n## Megabyte-PDF skew worst case (bench.py --skew-probe)\n\n"
-        "The bench corpus's ×500 skew docs repeat one content stream,\n"
-        "which the per-stream parse memo makes cheap — the honest worst\n"
-        "case is a mega-PDF with DISTINCT pages (every stream parses,\n"
-        "every page runs repair).  Each probe row: N median web docs +\n"
-        "M mega-PDFs of P distinct pages; interleaved A/B vs the paged\n"
-        f"path (payloads ≥ {probes[0]['paged_threshold'] >> 20} MB → "
-        f"page-level parallelism), local[{probes[0].get('cpus', CPUS)}]:\n\n"
-        "| corpus shape | split-fed secs | paged secs | paged/split | "
-        "winner |\n|---|---|---|---|---|\n"
-        f"{rows}\n"
-        + (
-            "The crossover is where one document's serial cost rivals the\n"
-            "whole corpus's balanced makespan: below it, 1 MB splits alone\n"
-            "hold the tail and paged routing only adds its page shuffle;\n"
-            "above it, the split-fed plan serialises on the giant and\n"
-            "paged routing wins.  Production guidance encoded by the\n"
-            "threshold default: text-layer extraction rarely crosses (per-\n"
-            "page cost ~tens of µs), while raster OCR (~1 s/page) crosses\n"
-            "at a few hundred pages — route by payload size × expected\n"
-            "per-page cost.\n"
-            if crossover
-            else
-            "At text-layer per-page cost (~tens of µs) 1 MB splits hold\n"
-            "the tail up to tens of thousands of distinct pages per\n"
-            "document — the paged path's page shuffle costs about what\n"
-            "the repair saves"
-            + (
-                f" — and the largest probed shape reaches the crossover\n"
-                f"point (ratio {min_ratio}): beyond it one document's\n"
-                "serial parse exceeds the whole corpus's balanced\n"
-                "makespan and paged routing pulls ahead.\n"
-                if min_ratio <= 1.1
-                else ".\n"
-            )
-            + "The paged path's true regime is high per-page cost:\n"
-            "raster OCR at ~1 s/page crosses at a few hundred pages,\n"
-            "where the same page shuffle is noise against the OCR work —\n"
-            "route by payload size × expected per-page cost.  That regime\n"
-            "is implemented: ocr_mode='raster' routes through the paged\n"
-            "path page-parallel (split-stage rasterisation, distributed\n"
-            "OCR, pipeline/paged.py), differentially tested against the\n"
-            "doc-at-once kernel.\n"
-        )
-    )
-
-
-# executor-mode scaling: real SEPARATE executor JVMs (Spark standalone
-# local-cluster), each with its own heap/GC/scan/Arrow-serialisation
-# threads and its own forked Python workers, package shipped via the
-# --py-files zip — the faithful software rendition of the north rule's
-# "N and 4N executors" (hardware memory bandwidth is still one box's;
-# the cpu-burn ceiling normalization accounts for that exactly as in
-# thread mode).  Default 4 cores per executor: N = 2 executors (8
-# cores) vs 4N = 8 executors (32 cores).  SPARK_GRAFT_EXEC_CORES
-# reshapes the rendition for diagnostics (8 → 1×8 vs 4×8 executors,
-# isolating the JVM-count term from the core-count term); heap scales
-# per core so every shape runs the same MB/core.  Experiment runs MUST
-# set SPARK_GRAFT_SCALING_LABEL so the 'executor-jvms' series stays
-# single-config.
-EXEC_CORES = int(os.environ.get("SPARK_GRAFT_EXEC_CORES", "4"))
-EXEC_MEM_PER_CORE_MB = int(os.environ.get("SPARK_GRAFT_EXEC_MEM_PER_CORE_MB", "768"))
-EXEC_MEM_MB = EXEC_CORES * EXEC_MEM_PER_CORE_MB
-
-
-def main_scaling(trials: int | None = None, executor_mode: bool = False) -> None:
-    """N-vs-4N scaling evidence (BASELINE.md protocol): the extraction job
-    (the BASELINE.json metric) on identical input at local[8] and
-    local[32], fresh JVM per measurement; efficiency =
-    (median_rate_32 / median_rate_8) / 4.
-
-    This shared VM's effective CPU fluctuates run-to-run (hypervisor
-    neighbours) — two defences:
-    * every trial round interleaves ALL four measurements
-      (cpu-burn@8, spark@8, cpu-burn@32, spark@32) so the hardware
-      ceiling and the pipeline sample the SAME noise window;
-    * 5 rounds by default (SPARK_GRAFT_SCALING_TRIALS), medians per
-      series.
-
-    The cpu-burn ceiling (scripts/scaling_calibration.py, affinity-
-    confined exactly like the Spark trials) is what a perfectly
-    compute-bound zero-communication job scales at on this box — 8→32
-    local threads multiplies cores but not memory bandwidth, while N→4N
-    executors multiplies both — so the headline number is the ratio
-    normalized to that ceiling."""
-    import statistics
-
-    trials = trials or int(os.environ.get("SPARK_GRAFT_SCALING_TRIALS", "5"))
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "scripts"))
-    from scaling_calibration import _cpu_task, _memcpy_task, run_once
-
-    rates: dict[int, list[float]] = {8: [], 32: []}
-    secs: dict[int, list[float]] = {8: [], 32: []}
-    cal: dict[int, list[float]] = {8: [], 32: []}
-    docs = None
-    for _trial in range(trials):
-        for n in (8, 32):
-            # hardware ceiling sample for THIS noise window, confined to
-            # the same cores the Spark trial is about to use
-            cal[n].append(run_once(_cpu_task, n))
-            # confine each level to exactly N cores: an N-core executor's
-            # GC/IO/shuffle threads share its N provisioned cores — without
-            # the cpuset, local[8] borrows the box's idle 24 cores for JVM
-            # service threads and inflates the small-N baseline
-            if executor_mode:
-                master = f"local-cluster[{n // EXEC_CORES},{EXEC_CORES},{EXEC_MEM_MB}]"
-            else:
-                master = f"local[{n}]"
-            cmd = ["taskset", "-c", f"0-{n - 1}", sys.executable, __file__,
-                   "--throughput-only", master]
-            # glibc tuning applied EQUALLY at both levels: megabyte
-            # payload buffers above the default 128 KB mmap threshold are
-            # mmap'd and munmap'd per allocation, so every reuse pays
-            # kernel zero-fill — pure DRAM traffic, the one resource 8→32
-            # threads cannot multiply.  Raising the threshold keeps those
-            # buffers on the reusable heap.  (On a cluster: set via
-            # spark.executorEnv.MALLOC_MMAP_THRESHOLD_.)
-            env = {
-                **os.environ,
-                "MALLOC_MMAP_THRESHOLD_": "536870912",
-                "MALLOC_TRIM_THRESHOLD_": "536870912",
-            }
-            out = subprocess.run(
-                cmd,
-                capture_output=True,
-                text=True,
-                check=True,
-                env=env,
-            )
-            line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
-            r = json.loads(line)
-            rates[n].append(r["extract_docs_per_sec"])
-            secs[n].append(r["extract_sec"])
-            docs = r["docs"]
-    med8 = statistics.median(rates[8])
-    med32 = statistics.median(rates[32])
-    eff = (med32 / med8) / 4
-    cpu_ceiling = (statistics.median(cal[32]) / statistics.median(cal[8])) / 4
-    # per-ROUND pairing: each round's spark ratio divided by the SAME
-    # round's calibration ratio (cal8 runs seconds before spark8, cal32
-    # before spark32), then the median over rounds — this cancels
-    # noise-window drift that the two independent series medians cannot
-    paired = [
-        ((rates[32][t] / rates[8][t]) / (cal[32][t] / cal[8][t]))
-        for t in range(trials)
-    ]
-    paired_norm = statistics.median(paired)
-    # Stall-trimmed variant: clean rounds cluster within ±15% per level,
-    # so a round where either level's rate is below HALF that level's
-    # per-run max marks an external full-box hypervisor stall inside that
-    # round's window (observed: rates32 collapsing 30k → 6k for one
-    # round).  The criterion is symmetric, auditable from the recorded
-    # per-round rates, and trims only catastrophic theft — partial
-    # contention stays in.
-    stall_rounds = [
-        t for t in range(trials)
-        if rates[32][t] < 0.5 * max(rates[32]) or rates[8][t] < 0.5 * max(rates[8])
-    ]
-    clean_paired = [p for t, p in enumerate(paired) if t not in stall_rounds]
-    paired_trimmed = statistics.median(clean_paired) if clean_paired else paired_norm
-    # memcpy floor is informational (the worst case) — median of 3 pairs
-    # (a single pair can land >1.0 in a noise window)
-    mem = {8: [], 32: []}
-    for _ in range(3):
-        for n in (8, 32):
-            mem[n].append(run_once(_memcpy_task, n))
-    memcpy_floor = round(
-        (statistics.median(mem[32]) / statistics.median(mem[8])) / 4, 4
-    )
-    cpu_ceiling = round(cpu_ceiling, 4)
-    normalized = eff / cpu_ceiling if cpu_ceiling else float("nan")
-
-    os.makedirs("BENCH", exist_ok=True)
-    # persist every protocol run: single-run headlines on this VM are a
-    # coin flip (observed normalized spread ~0.70-0.90 across a day), so
-    # BASELINE.md reports the across-runs median too
-    run_rec = {
-        "ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        # experiments (allocator/batch-size A/Bs) label their runs so the
-        # across-runs "current" median stays a single-config series
-        "label": os.environ.get("SPARK_GRAFT_SCALING_LABEL", "current"),
-        "median8": round(med8, 1), "median32": round(med32, 1),
-        "raw": round(eff, 4), "cpu_ceiling": cpu_ceiling,
-        "normalized": round(normalized, 4),
-        "normalized_paired": round(paired_norm, 4),
-        "paired_rounds": [round(p, 4) for p in paired],
-        "rates8": [round(r, 1) for r in rates[8]],
-        "rates32": [round(r, 1) for r in rates[32]],
-        "stall_rounds": len(stall_rounds),
-        "normalized_paired_trimmed": round(paired_trimmed, 4),
-    }
-    with open("BENCH/runs.jsonl", "a") as rf:
-        rf.write(json.dumps(run_rec) + "\n")
-    with open("BENCH/runs.jsonl") as rf:
-        history = [json.loads(l) for l in rf if l.strip()]
-    import statistics as _st
-
-    def _series_stats(rows: list[dict]) -> dict | None:
-        """Across-runs medians for ONE single-config series.  Prefers runs
-        carrying the per-round paired estimator (it cancels window drift
-        the older medians-of-series runs cannot); falls back to the mixed
-        pool while fewer than 3 paired runs exist."""
-        if not rows:
-            return None
-        paired_rows = [r for r in rows if "normalized_paired" in r]
-        if len(paired_rows) >= 3:
-            agg, kind = paired_rows, "paired-normalized"
-            norm = round(_st.median(r["normalized_paired"] for r in agg), 4)
-        else:
-            agg, kind = rows, "normalized (mixed estimators)"
-            norm = round(
-                _st.median(r.get("normalized_paired", r["normalized"]) for r in agg), 4
-            )
-        tv = [
-            r.get("normalized_paired_trimmed", r.get("normalized_paired"))
-            for r in agg
-            if r.get("normalized_paired_trimmed", r.get("normalized_paired"))
-            is not None
-        ]
-        return {
-            "n": len(agg),
-            "kind": kind,
-            "norm": norm,
-            "raw": round(_st.median(r["raw"] for r in agg), 4),
-            "rate32": round(_st.median(r["median32"] for r in agg), 0),
-            "trimmed": round(_st.median(tv), 4) if tv else None,
-            "stalls": sum(r.get("stall_rounds", 0) for r in agg),
-        }
-
-    # the two single-config series the headline must report SIDE BY SIDE
-    # (round-4 verdict: the executor-JVM rendition is the stricter reading
-    # of the N-vs-4N rule and may not hide behind the thread-mode number)
-    thread_stats = _series_stats(
-        [r for r in history if r.get("label", "current") == "current"]
-    )
-    exec_stats = _series_stats(
-        [r for r in history if r.get("label") == "executor-jvms"]
-    )
-    # the container-faithful experiment series: same separate executor
-    # JVMs, but each JVM told its true core budget
-    # (-XX:ActiveProcessorCount=<exec cores>), exactly what a
-    # Kubernetes/YARN cgroup limit makes ergonomics see on a real cluster
-    apc_stats = _series_stats(
-        [r for r in history if r.get("label") == "executor-jvms-apc"]
-    )
-
-    def _verdict(stats: dict | None) -> str:
-        """Explicit estimator naming (round-4 ADVICE): state WHICH
-        estimator the MEETS/below call is computed on, and never let a
-        0.0 trimmed value fall through to the untrimmed one."""
-        if stats is None:
-            return "no runs"
-        if stats["trimmed"] is not None:
-            est_name, est = "stall-trimmed paired median", stats["trimmed"]
-        else:
-            est_name, est = "paired-normalized median", stats["norm"]
-        word = "MEETS" if est >= 0.8 else "is BELOW"
-        return f"{word} the ≥ 0.8 target on the {est_name} ({est:.3f})"
-
-    def _est(stats: dict | None) -> float | None:
-        """The series' headline estimator value (same choice as _verdict)."""
-        if stats is None:
-            return None
-        return stats["trimmed"] if stats["trimmed"] is not None else stats["norm"]
-
-    def _interjvm_account() -> str:
-        """Round-5 verdict #1's 'measured account of the inter-JVM gap':
-        three renditions of the same N-vs-4N rule isolate which term the
-        executor-JVM deficit comes from.  Rendered only once the executor
-        series exists; the APC row appears once the experiment has run."""
-        if exec_stats is None:
-            return ""
-        e = _est(exec_stats)
-        out = [
-            "\n## The inter-JVM term, isolated\n\n",
-            "Three renditions of the same N-vs-4N rule over identical "
-            "input and protocol\nseparate the terms of the executor-JVM "
-            "gap:\n\n",
-            "| rendition | what 8→32 changes | runs | series median "
-            "(stall-trimmed paired estimator) |\n|---|---|---|---|\n",
-        ]
-        t = _est(thread_stats)
-        if t is not None:
-            out.append(
-                f"| thread mode (1 JVM, local[8]→local[32]) | core count "
-                f"only | {thread_stats['n']} | {t:.3f} |\n"
-            )
-        out.append(
-            f"| executor JVMs, un-containerized (2×4 → 8×4) | cores AND "
-            f"JVM count; every JVM's ergonomics sized for all 32 cores | "
-            f"{exec_stats['n']} | {e:.3f} |\n"
-        )
-        a = _est(apc_stats)
-        if a is not None:
-            out.append(
-                f"| executor JVMs, container-faithful "
-                f"(-XX:ActiveProcessorCount={EXEC_CORES}) | cores AND JVM "
-                f"count; each JVM sized for its {EXEC_CORES}-core share | "
-                f"{apc_stats['n']} | {a:.3f} |\n"
-            )
-        out.append(
-            "\nAn UNcontainerized local-cluster executor sees the whole "
-            "box, so each of the\n8 JVMs sizes its GC/JIT/ForkJoin service "
-            "pools for 32 cores — 8 full-box\nthread complements contending "
-            "inside one 32-core cpuset.  A real cluster\nnever has this "
-            "term: cgroup limits make each executor's ergonomics see its\n"
-            "container's cores, which is exactly what the APC rendition "
-            "reproduces\n(session.py SPARK_GRAFT_EXEC_JAVA_OPTS).\n"
-        )
-        if a is not None and e is not None:
-            delta = a - e
-            if delta >= 0.02:
-                out.append(
-                    f"\nMeasured: the container-faithful series runs "
-                    f"{delta:+.3f} above the\nun-containerized one — that "
-                    "share of the executor-JVM deficit is JVM-ergonomics\n"
-                    "oversubscription, an artifact of the sandbox rendition "
-                    "that a real\nKubernetes/YARN cluster removes "
-                    "automatically.  The container-faithful\nnumber is the "
-                    "faithful reading of the N-vs-4N rule for real "
-                    "deployments.\n"
-                )
-            elif delta <= -0.02:
-                out.append(
-                    f"\nMeasured: APC moved the median by {delta:+.3f} — "
-                    "ergonomics oversubscription\nis NOT the explanation; "
-                    "the residual gap is per-JVM fixed service load and\n"
-                    "cross-process task RPC on one shared memory bus, which "
-                    "a real 4N-executor\ncluster pays from 4× the aggregate "
-                    "bandwidth.\n"
-                )
-            else:
-                out.append(
-                    f"\nMeasured: APC moved the median by only {delta:+.3f} "
-                    "— ergonomics\noversubscription is not the dominant "
-                    "term at this executor shape; the\nresidual vs thread "
-                    "mode is per-JVM fixed service load and cross-process\n"
-                    "task RPC on one shared memory bus — terms a real "
-                    "4N-executor cluster pays\nfrom 4× the aggregate memory "
-                    "bandwidth and per-node service cores.\n"
-                )
-        return "".join(out)
-
-    # round-5 ADVICE: thread_stats is None on a checkout whose first
-    # scaling run is --scaling-cluster (no 'current'-labeled rows yet) —
-    # emit an explicit "no runs" sentence instead of indexing into None
-    if thread_stats is None:
-        thread_clause = (
-            "Thread-mode series (local[8] vs local[32], the proxy "
-            "BASELINE.json names): no thread-mode runs recorded yet — "
-            "run `bench.py --scaling` to populate it."
-        )
-    else:
-        thread_clause = (
-            f"Thread-mode series (local[8] vs local[32], the proxy "
-            f"BASELINE.json names; {thread_stats['n']} runs, "
-            f"{thread_stats['kind']}): median raw {thread_stats['raw']:.3f}, "
-            f"median normalized {thread_stats['norm']:.3f}"
-            + (f", median stall-trimmed {thread_stats['trimmed']:.3f} "
-               f"({thread_stats['stalls']} stall rounds trimmed across the "
-               f"series)"
-               if thread_stats["trimmed"] is not None else "")
-            + f" — {_verdict(thread_stats)}; median local[32] rate "
-            f"{thread_stats['rate32']:.0f} docs/s."
-        )
-
-    def _row(r):
-        p = f"{r['normalized_paired']:.3f}" if "normalized_paired" in r else "—"
-        tr = (
-            f"{r['normalized_paired_trimmed']:.3f}"
-            if "normalized_paired_trimmed" in r
-            else "—"
-        )
-        st = str(r.get("stall_rounds", "—"))
-        return (
-            f"| {r['ts']} | {r.get('label', 'current')} | {r['median8']:.0f} | "
-            f"{r['median32']:.0f} | {r['raw']:.3f} | {r['cpu_ceiling']:.3f} | "
-            f"{r['normalized']:.3f} | {p} | {tr} | {st} |"
-        )
-
-    history_table = "\n".join(_row(r) for r in history)
-    with open("BENCH/BASELINE.md", "w") as f:
-        f.write(
-            "# BENCH — scaling evidence (N vs 4N parallelism)\n\n"
-            "Protocol (BASELINE.md): the extraction job (sniff → PDF/HTML parse →\n"
-            f"repair → cascade → spans) on identical input ({docs} synthetic\n"
-            "north-rule docs incl. ~400 KB ×500-page skew rows), run at local[8]\n"
-            "and local[32] in separate JVMs — the sandbox proxy for the\n"
-            f"N-vs-4N-executor rule.  {trials} interleaved trials per level;\n"
-            "medians reported (this shared VM shows ±20% run noise).  Each\n"
-            "level runs under `taskset -c 0-(N-1)`: an N-core executor's\n"
-            "GC/IO/shuffle threads share its N provisioned cores, so the\n"
-            "small-N baseline must not borrow the box's idle cores.\n"
-            "Since round 4 the measurement starts from STEADY STATE: a 2%\n"
-            "full-parallelism sample warms every Python worker (fork +\n"
-            "kernel import) before the clock starts — the old one-task\n"
-            "warm-up charged N worker cold-starts to the timed region,\n"
-            "billing local[32] 4× the startup of local[8]; a multi-hour\n"
-            "100 TB job pays per-executor startup once, so steady-state is\n"
-            "the honest regime.  Both levels run with\n"
-            "MALLOC_MMAP_THRESHOLD_ raised so megabyte payload buffers\n"
-            "reuse heap pages instead of paying kernel zero-fill per\n"
-            "allocation (pre-round-4 history rows are labeled\n"
-            "r3-limit64warm).\n\n"
-            "| master | trial secs | median docs/s |\n|---|---|---|\n"
-            f"| local[8] | {', '.join(f'{s:.1f}' for s in secs[8])} | {med8:.0f} |\n"
-            f"| local[32] | {', '.join(f'{s:.1f}' for s in secs[32])} | {med32:.0f} |\n\n"
-            f"**Raw scaling efficiency = ({med32:.0f} / {med8:.0f}) / 4 = {eff:.3f}**"
-            " (target ≥ 0.8)\n\n"
-            "## Normalization to the measured hardware ceiling\n\n"
-            "A single box cannot emulate an N→4N cluster: 8→32 local threads\n"
-            "multiplies CPU parallelism but NOT memory bandwidth, while adding\n"
-            "executors multiplies both.  Two no-Spark microbenchmarks\n"
-            "(scripts/scaling_calibration.py, affinity-confined to the same\n"
-            "cores as the Spark trials) bound what any workload can show\n"
-            "here; the CPU burn is sampled INTERLEAVED with every Spark\n"
-            "trial round, so ceiling and measurement see the same\n"
-            "hypervisor-noise window:\n\n"
-            "| workload | 8→32 efficiency |\n|---|---|\n"
-            f"| pure-CPU burn (integer loop, {trials}-round median) | "
-            f"**{cpu_ceiling:.3f}** |\n"
-            f"| memcpy burn ({8} MB buffer copies) | **{memcpy_floor:.3f}** |\n\n"
-            f"**Normalized efficiency = {eff:.3f} / {cpu_ceiling:.3f} = "
-            f"{normalized:.3f}** (this run) — the fraction of this hardware's achievable\n"
-            "scaling the pipeline realizes.  Note the pure-CPU ceiling means\n"
-            "even a perfectly compute-bound, zero-communication job cannot\n"
-            "show raw ≥ 0.8 on this box 8→32 — the normalization is the\n"
-            "sandbox's honest stand-in for the N→4N-executor rule, not a\n"
-            "relaxation of it.  The residual gap to 1.0 is the\n"
-            "pipeline's memory-traffic share (payload bytes crossing parquet\n"
-            "decode → Arrow → Python pipe), which on a real 4N-executor\n"
-            "cluster is paid from 4× the aggregate memory bandwidth and does\n"
-            "not serialise scaling.\n\n"
-            "## Protocol-run history (current kernel + config)\n\n"
-            "Every `bench.py --scaling` invocation appends to\n"
-            "BENCH/runs.jsonl; the across-runs MEDIAN is the number to\n"
-            "read — hypervisor neighbours move single runs by ±25%:\n\n"
-            "| run (UTC) | kernel | docs/s @8 | docs/s @32 | raw | cpu ceiling | normalized | paired | trimmed | stalls |\n"
-            "|---|---|---|---|---|---|---|---|---|---|\n"
-            f"{history_table}\n\n"
-            "('paired' = median over rounds of the per-ROUND spark ratio /\n"
-            "calibration ratio — each round's ceiling sample runs in the\n"
-            "same noise window as its spark sample, so this estimator\n"
-            "cancels drift that independent series medians cannot.\n"
-            "'trimmed' = the same median over rounds EXCLUDING full-box\n"
-            "hypervisor stalls — rounds where either level's rate fell\n"
-            "below HALF that run's max for the level (clean rounds cluster\n"
-            "within ±15%; observed stalls collapse 30k → 6k docs/s).  The\n"
-            "criterion is symmetric and auditable from the per-round rates\n"
-            "recorded in runs.jsonl; 'stalls' counts trimmed rounds.\n"
-            "Label key: r3-limit64warm = pre-round-4 protocol whose\n"
-            "one-task warm-up charged N worker cold-starts to the timed\n"
-            "region; r4-shortcal = steady-state warm-up but 3 s calibration\n"
-            "burns that could miss a stall the 8-25 s spark window caught;\n"
-            "current = steady-state warm-up + window-matched calibration;\n"
-            "executor-jvms = same protocol on REAL separate executor JVMs\n"
-            "(Spark standalone local-cluster, 2 vs 8 executors × 4 cores,\n"
-            "package shipped via the --py-files zip) — the faithful\n"
-            "software rendition of the N-vs-4N-executor rule;\n"
-            "executor-jvms-apc = the same executor-JVM protocol with\n"
-            "-XX:ActiveProcessorCount=<exec cores> on every executor JVM —\n"
-            "the container-faithful rendition (see 'The inter-JVM term,\n"
-            "isolated' below).\n\n"
-            f"**{thread_clause}  Executor-JVM series (REAL separate "
-            f"executor JVMs, 2×4 vs 8×4 cores — the stricter rendition of "
-            f"the N-vs-4N-executor rule"
-            + (
-                f"; {exec_stats['n']} runs, {exec_stats['kind']}): median "
-                f"raw {exec_stats['raw']:.3f}, median normalized "
-                f"{exec_stats['norm']:.3f}"
-                + (f", median stall-trimmed {exec_stats['trimmed']:.3f}"
-                   if exec_stats["trimmed"] is not None else "")
-                + f" — {_verdict(exec_stats)}."
-                if exec_stats is not None
-                else "): no runs recorded yet."
-            )
-            + "**\n"
-            + _interjvm_account()
-            + "\nRead the table as a whole: the r3-early rows are the SAME\n"
-            "plan, same input, with a ~2× slower per-document kernel — it\n"
-            "scales at 0.89-0.90 normalized.  The current kernel doubles\n"
-            "throughput and the ratio falls: per-document compute no\n"
-            "longer hides the per-document serialization overhead\n"
-            "(parquet→Arrow→Python pipe), which is the one term a single\n"
-            "box CANNOT scale (shared memory bus) and a 4N-executor\n"
-            "cluster pays from 4× the aggregate bandwidth.  The plan has\n"
-            "no structural bottleneck — the slow-kernel rows prove it —\n"
-            "and shipping the slower kernel to flatter the proxy ratio\n"
-            "would be optimizing the metric against the user.\n\n"
-            "Plan-shape evidence that the job itself\n"
-            "has no scaling bottleneck:\n\n"
-            "* map-only extraction — the payload column never crosses a\n"
-            "  shuffle (scan → MapInArrow, ZERO Exchange in the plan;\n"
-            "  ReadSchema prunes to url/warc_ts/html/lang);\n"
-            "* split-size task granularity (1 MB → ≥4 task waves at 32\n"
-            "  cores) for finish-time balancing against per-document cost\n"
-            "  variance — measured +9%@32 / +8%@8 over 2 MB splits;\n"
-            "* page-level parallelism for documents too large for\n"
-            "  one-doc-per-task (pipeline/paged.py);\n"
-            "* numbering = two-phase dense rank over a pinned pruned key\n"
-            "  slice (no global sort, no recompute of extraction).\n\n"
-            "## The throughput-vs-single-box-ratio frontier (reproducible)\n\n"
-            "The raw ratio on one box is a function of per-document COMPUTE\n"
-            "DENSITY, not plan quality: the identical plan over identical\n"
-            "bytes traces the hardware's bandwidth ceiling as the kernel gets\n"
-            "faster.  Measured on this box (reproduce by toggling\n"
-            "`SPARK_GRAFT_DISABLE_GATES=1`, which disables the byte-identity-\n"
-            "preserving regex pre-gates and lowers compute density):\n\n"
-            "| kernel | local[32] docs/s | raw 8→32 efficiency |\n|---|---|---|\n"
-            "| round-1 unoptimised | ~4,800 | 0.73 |\n"
-            "| round-1 optimised | 6,534 | 0.515 |\n"
-            "| round-2, gates off (`SPARK_GRAFT_DISABLE_GATES=1`) | ~10,900 | ~0.74 |\n"
-            "| round-2 (mapInPandas) | 13,820 | 0.549 |\n"
-            "| round-3 early (mapInArrow, pandas skipped both ways) | 18,325 | 0.646 |\n"
-            "| round-3 final (+2× kernel: keyword prefilter, token/page/\n"
-            "  stream memos; 1 MB splits = 4 waves at 32 cores) | "
-            f"{med32:.0f} | {eff:.3f} |\n\n"
-            "Faster COMPUTE reduces the single-box ratio while multiplying\n"
-            "real throughput — optimising for the proxy ratio would mean\n"
-            "shipping a slower engine.  Cutting MEMORY TRAFFIC raises both:\n"
-            "round 3 replaced mapInPandas with mapInArrow (no pandas\n"
-            "materialisation on either side; url/warc_ts/lang pass through\n"
-            "as the input's own Arrow buffers), which lifted throughput AND\n"
-            "the raw ratio together — direct evidence the residual gap is\n"
-            "bandwidth, not plan shape.  On a real N→4N cluster each\n"
-            "executor adds its own memory bandwidth, so the compute-density\n"
-            "term cancels and the plan-shape properties above are what\n"
-            "determine scaling.\n\n"
-            "The full numbered+named pipeline is benchmarked in bench.py's\n"
-            "extract_corpus entry.\n"
-            + _skew_probe_section()
-        )
-    print(json.dumps({"rates8": rates[8], "rates32": rates[32],
-                      "median8": med8, "median32": med32,
-                      "efficiency": round(eff, 4),
-                      "cpu_ceiling": cpu_ceiling,
-                      "memcpy_floor": memcpy_floor,
-                      "normalized_efficiency": round(normalized, 4)}))
-
-
 if __name__ == "__main__":
-    if "--scaling-cluster" in sys.argv:
-        # separate-executor-JVM rendition of the N-vs-4N rule; history
-        # rows labeled 'executor-jvms' (env-overridable) so the
-        # thread-mode 'current' series stays single-protocol.  A JVM-opts
-        # experiment without an explicit label would silently contaminate
-        # that single-config series (round-6 review) — refuse instead of
-        # trusting operator discipline.
-        if (os.environ.get("SPARK_GRAFT_EXEC_JAVA_OPTS")
-                and not os.environ.get("SPARK_GRAFT_SCALING_LABEL")):
-            sys.exit(
-                "SPARK_GRAFT_EXEC_JAVA_OPTS is set: name the experiment via "
-                "SPARK_GRAFT_SCALING_LABEL (e.g. executor-jvms-apc) so the "
-                "'executor-jvms' series stays single-config"
-            )
-        os.environ.setdefault("SPARK_GRAFT_SCALING_LABEL", "executor-jvms")
-        # rebuild the --py-files zip first: executors import the PACKAGED
-        # kernel while the driver pickles closures against the working
-        # tree — a stale zip turns any signature change into a mid-run
-        # TypeError on the executors
-        try:
-            subprocess.run(
-                ["bash", os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "scripts", "package.sh")],
-                check=True, capture_output=True, text=True,
-            )
-        except subprocess.CalledProcessError as e:
-            # round-5 ADVICE: a swallowed rebuild failure is an opaque
-            # dead-end for a diagnostics entry point — show the script's
-            # output before propagating
-            sys.stderr.write(e.stdout or "")
-            sys.stderr.write(e.stderr or "")
-            raise
-        main_scaling(executor_mode=True)
-    elif "--scaling" in sys.argv:
-        main_scaling()
-    elif "--skew-probe" in sys.argv:
-        main_skew_probe()
-    elif "--throughput-only" in sys.argv:
-        master = sys.argv[-1]
-        print(json.dumps(throughput_once(master)))
-    else:
-        main_bench()
+    main_bench()

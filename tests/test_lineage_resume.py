@@ -225,3 +225,26 @@ def test_finalize_names_matches_separate_numbering(spark, tmp_path, mode):
         lp_year = (sa if mode == "SA" else counters)[counter_key(mode, ts.year)]
         assert fused[url][:3] == (lp, lp_year, disp), url
     assert len({ts.year for _, ts, *_rest in rows}) == 4
+
+
+def test_resume_with_other_n_chunks_is_refused(spark, tmp_path):
+    """Chunk ids from pmod(xxhash64(url), 4) name other url sets than
+    under 8, so resuming a 4-chunk checkpoint with 8 chunks would write
+    the overlap twice.  It must raise before writing anything, and a
+    resume with the checkpoint's own count must still finish the job."""
+    docs = corpus_df(spark, 200, seed=1)
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    assert run_resumable(spark, docs, out, ckpt, n_chunks=4,
+                         max_chunks_per_run=2) == [0, 1]
+    written = spark.read.parquet(out).count()
+
+    with pytest.raises(ValueError, match=r"n_chunks=\[4\].*n_chunks=8"):
+        run_resumable(spark, docs, out, ckpt, n_chunks=8)
+    assert spark.read.parquet(out).count() == written
+    assert completed_chunks(spark, ckpt) == {0, 1}
+
+    assert run_resumable(spark, docs, out, ckpt, n_chunks=4) == [2, 3]
+    final = spark.read.parquet(out)
+    assert final.count() == final.select("url").distinct().count() == 200
+    assert {r["n_chunks"] for r in lineage_report(spark, ckpt).collect()} == {4}

@@ -3,12 +3,11 @@
 separate executor JVMs), and the engine shipped ONLY via
 ``--py-files dist/engine.zip``.
 
-The in-process tests (test_job_cli.py, bench --scaling-cluster) already
-cover the job semantics and the zip's importability on executors; what
-only this test proves is the full submission path itself — driver
-launched by the spark-submit launcher scripts, the zip distributed by
-the SparkContext file server to freshly forked executor JVMs, and the
-resumable job completing under that regime.  Reference packaging analog:
+The in-process tests (test_job_cli.py) already cover the job
+semantics; what only this test proves is the full submission path
+itself — driver launched by the spark-submit launcher scripts, the zip
+distributed by the SparkContext file server to freshly forked executor
+JVMs, and the resumable job completing under that regime.  Reference packaging analog:
 the reference ships a PyInstaller one-file binary
 (1_Program_Do_Archiwizacji/build_exe.py); ours is the cluster-native
 equivalent per SURVEY §7 step 5.
@@ -32,7 +31,7 @@ SPARK_SUBMIT = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
 )
 def test_spark_submit_py_files_local_cluster(tmp_path):
     # build the zip the way a deploy would — package.sh is the one
-    # packaging recipe, shared with bench --scaling-cluster
+    # packaging recipe
     r = subprocess.run(
         ["bash", str(REPO / "scripts" / "package.sh")],
         capture_output=True, text=True, timeout=120,
