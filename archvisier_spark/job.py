@@ -69,7 +69,7 @@ def main(argv: list[str] | None = None) -> int:
     from archvisier_spark.session import get_spark
     from archvisier_spark.corpus import corpus_df
     from archvisier_spark.pipeline.lineage import (
-        completed_chunks, finalize_names, lineage_report, run_resumable,
+        STATUS_OK, finalize_names, lineage_report, run_resumable,
     )
 
     if args.config is not None and not Path(args.config).exists():
@@ -105,7 +105,11 @@ def main(argv: list[str] | None = None) -> int:
         work_mode=args.work_mode,
         ocr_mode=args.ocr_mode,
     )
-    done = completed_chunks(spark, args.checkpoint)
+    # one read of the checkpoint for the whole report: the latest row per
+    # chunk gives the done set and the documents it holds
+    lineage = lineage_report(spark, args.checkpoint).select(
+        "chunk_id", "status", "n_docs").collect()
+    done = {r["chunk_id"] for r in lineage if r["status"] == STATUS_OK}
     report = {
         "chunks_processed_this_run": processed,
         "chunks_complete": len(done),
@@ -134,8 +138,7 @@ def main(argv: list[str] | None = None) -> int:
             "re-run to finish and export"
         )
 
-    lineage = lineage_report(spark, args.checkpoint)
-    report["lineage_docs"] = lineage.groupBy().sum("n_docs").collect()[0][0]
+    report["lineage_docs"] = sum(r["n_docs"] for r in lineage)
     report["spark_jobs"] = max(tracker.getJobIdsForGroup(), default=-1) - last_job
     print(json.dumps(report))
     spark.stop()

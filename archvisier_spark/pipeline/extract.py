@@ -229,8 +229,6 @@ def extract_documents(
     language: str = "auto",
     work_mode: str = "KP",
     case_signature: str = "",
-    partitions: int | None = None,
-    paged_threshold: int | None = None,
     entity_rules=None,
     llm_tier=None,
     ocr_mode: str = "text",
@@ -238,20 +236,17 @@ def extract_documents(
 ) -> DataFrame:
     """Distributed sniff→extract→cascade over the north-rule table.
 
-    **Map-only**: the extraction UDF runs directly on the scan partitions, so the megabyte payload column never
-    crosses a shuffle — measured on this box, feeding Arrow batches out of
-    shuffle files anti-scales (32 threads 2.5× slower than 8), while
-    scan-fed batches scale cleanly.  Balance then comes from input splits,
-    sized by the session's one planner rule (``archvisier_spark.session``:
-    about ``4 × cores`` splits per scan, whole small files packed
-    together), which is the right granularity for byte-skewed documents.
-    Writers of the input table control file width; the corpus generator
-    and lineage chunks both emit fine-grained files.
-
-    ``paged_threshold``: optionally route payloads above this many bytes
-    through page-level parallelism (pipeline/paged.py) — the answer for
-    documents so large that even one-doc-per-task is too coarse;
-    ``partitions`` sizes that path's page fan-out.
+    **One plan, map-only**: a single ``mapInArrow`` stage runs directly on
+    the scan partitions, so the megabyte payload column never crosses a
+    shuffle — on a 32-core box, feeding Arrow batches out of shuffle files
+    anti-scaled (32 threads 2.5× slower than 8), while scan-fed batches
+    scaled cleanly.  Balance then comes from input splits, sized by the
+    session's one planner rule (``archvisier_spark.session``: about
+    ``4 × cores`` splits per scan, whole small files packed together),
+    which is the right granularity for byte-skewed documents.  The unit of
+    work is the document: every page of a PDF is extracted in the task
+    that reads it.  Writers of the input table control file width; the
+    corpus generator and lineage chunks both emit fine-grained files.
 
     ``ocr_engine``: optional :class:`~archvisier_spark.kernel.document.
     RasterEngine` overriding the raster path's rasterise/OCR/detect hooks
@@ -275,21 +270,7 @@ def extract_documents(
     fn = make_extract_arrow(language, work_mode, case_signature,
                             entity_rules, llm_tier, use_content_type=has_ct,
                             ocr_mode=ocr_mode, ocr_engine=ocr_engine)
-    if paged_threshold is None:
-        return cols.mapInArrow(fn, EXTRACT_SCHEMA)
-
-    from archvisier_spark.pipeline.paged import extract_documents_paged
-
-    huge = cols.filter(F.length("html") >= paged_threshold)
-    rest = cols.filter(F.length("html") < paged_threshold)
-    return rest.mapInArrow(fn, EXTRACT_SCHEMA).unionByName(
-        extract_documents_paged(
-            huge, language=language, work_mode=work_mode,
-            case_signature=case_signature, partitions=partitions,
-            entity_rules=entity_rules, llm_tier=llm_tier,
-            ocr_mode=ocr_mode, ocr_engine=ocr_engine,
-        )
-    )
+    return cols.mapInArrow(fn, EXTRACT_SCHEMA)
 
 
 def observed_extraction(df: DataFrame, **kwargs):

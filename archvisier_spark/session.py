@@ -31,10 +31,10 @@ from pyspark.sql import SparkSession
 
 # Arrow transfer batch: 512 rows ≈ 1-4 MB for median web docs; a batch
 # containing one megabyte-scale PDF stays bounded because such rows are
-# ~1-per-hundred (SURVEY.md §4 "maxRecordsPerBatch tuned").  The env
-# override is the only way to shrink batches for a job.py raster run
-# (paged.py): this builder's own setting wins over spark-submit --conf.
-ARROW_BATCH_ROWS = int(os.environ.get("SPARK_GRAFT_ARROW_BATCH_ROWS", "512"))
+# ~1-per-hundred (SURVEY.md §4 "maxRecordsPerBatch tuned").  A job whose
+# rows are heavier (a raster-OCR run over scanned PDFs) shrinks batches
+# with Spark's own key: an explicit setting wins over this default.
+ARROW_BATCH_ROWS = 512
 
 
 def get_spark(
@@ -52,7 +52,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         # 64-bit Arrow offsets: one contiguous buffer for megabyte binary
         # payloads instead of 2 GiB-bounded chunked arrays
         .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
@@ -78,10 +77,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # the core count is known only once the context is up (on any master);
-    # an explicit setting (extra_conf, spark-submit --conf) wins
-    if spark.conf.get("spark.sql.files.minPartitionNum", None) is None:
-        spark.conf.set("spark.sql.files.minPartitionNum",
-                       str(4 * spark.sparkContext.defaultParallelism))
+    # defaults that an explicit setting (extra_conf, spark-submit --conf)
+    # overrides; the core count is known only once the context is up
+    for key, default in (
+        ("spark.sql.execution.arrow.maxRecordsPerBatch", ARROW_BATCH_ROWS),
+        ("spark.sql.files.minPartitionNum", 4 * spark.sparkContext.defaultParallelism),
+    ):
+        if spark.conf.get(key, None) is None:
+            spark.conf.set(key, str(default))
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -35,6 +35,16 @@ def test_job_cli_synthesize_resume_finalize(tmp_path):
     assert rep2["finalized_rows"] == 80
     assert rep2["spark_jobs"] > rep1["spark_jobs"]  # finalize adds jobs
 
+    # a no-op resume reports the same state; only the work done differs
+    r3 = subprocess.run(base + ["--finalize", "--export-xlsx", xlsx],
+                        capture_output=True, text=True, timeout=300)
+    assert r3.returncode == 0, r3.stderr[-2000:]
+    rep3 = json.loads([l for l in r3.stdout.splitlines() if l.startswith("{")][-1])
+    assert rep3["chunks_processed_this_run"] == []
+    varying = ("chunks_processed_this_run", "spark_jobs")
+    assert ({k: v for k, v in rep3.items() if k not in varying}
+            == {k: v for k, v in rep2.items() if k not in varying})
+
     # the styled workbook is a real OOXML zip with 80 data rows
     import xml.etree.ElementTree as ET
     import zipfile

@@ -133,7 +133,7 @@ def test_pipeline_differential_with_entity_provider(spark, n_docs):
     docs = corpus_df(spark, n_docs, seed=7, skew_every=7, skew_factor=10, partitions=4)
     got = {
         r["url"]: r
-        for r in extract_documents(docs, partitions=4, entity_rules=DIFF_RULES).collect()
+        for r in extract_documents(docs, entity_rules=DIFF_RULES).collect()
     }
 
     provider = RuleNer(DIFF_RULES)

@@ -33,6 +33,9 @@ def test_pdf_roundtrip_single_page():
 def test_pdf_roundtrip_multipage_order():
     pdf = build_pdf([["page one line"], ["page two line"], ["page three line"]])
     assert pdf_page_texts(pdf) == ["page one line", "page two line", "page three line"]
+    # past page 9: numeric page order, not the lexical order of "10" < "2"
+    lines = [f"strona numer {i} akapit dokumentu" for i in range(25)]
+    assert pdf_page_texts(build_pdf([[line] for line in lines])) == lines
 
 
 def test_pdf_roundtrip_escapes_and_unicode():

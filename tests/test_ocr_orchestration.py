@@ -150,6 +150,21 @@ def test_raster_path_error_is_data_not_failure():
     assert "rasteriser exploded" in text
     assert "Traceback" in status
 
+    # OCR dying on page 2 of 3: one error row for the document, the text
+    # of page 1 discarded
+    def ocr_dies_on_page_2(img, lang, cfg):
+        if img == b"PNG2":
+            raise RuntimeError("tesseract crashed")
+        return "tekst"
+
+    text, status = extract_pdf_text_raster(
+        build_pdf([["A"], ["B"], ["C"]]), "pol",
+        rasterize_fn=lambda payload, page=1, dpi=200: f"PNG{page}".encode(),
+        ocr_fn=ocr_dies_on_page_2,
+    )
+    assert text == f"{OCR_ERROR_PREFIX}tesseract crashed"
+    assert "Traceback" in status
+
 
 def test_raster_path_empty_pdf_contract():
     """Zero rasterisable pages → the reference's empty-PDF literal

@@ -19,7 +19,7 @@ N_DOCS = 60
 @pytest.fixture(scope="module")
 def extracted(spark):
     docs = corpus_df(spark, N_DOCS, seed=42, skew_every=5, skew_factor=25, partitions=6)
-    result = with_new_names(extract_documents(docs, partitions=6), work_mode="KP")
+    result = with_new_names(extract_documents(docs), work_mode="KP")
     rows = {r["url"]: r for r in result.collect()}
     assert len(rows) == N_DOCS
     return rows
@@ -97,8 +97,8 @@ def test_partitioning_invariance(spark):
     does not depend on physical layout)."""
     a = corpus_df(spark, 20, seed=7, partitions=1)
     b = corpus_df(spark, 20, seed=7, partitions=5)
-    ra = {r["url"]: r["extracted_text"] for r in extract_documents(a, partitions=2).collect()}
-    rb = {r["url"]: r["extracted_text"] for r in extract_documents(b, partitions=7).collect()}
+    ra = {r["url"]: r["extracted_text"] for r in extract_documents(a).collect()}
+    rb = {r["url"]: r["extracted_text"] for r in extract_documents(b).collect()}
     assert ra == rb
 
 
@@ -116,7 +116,7 @@ def test_errors_are_rows_not_failures(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    rows = {r["url"]: r for r in extract_documents(df, partitions=2).collect()}
+    rows = {r["url"]: r for r in extract_documents(df).collect()}
     assert rows["u1"]["extracted_text"] == "BŁĄD: Plik PDF jest pusty lub uszkodzony."
     assert rows["u2"]["format"] == "empty"
     assert rows["u2"]["extracted_text"] == ""
@@ -159,7 +159,7 @@ def test_extraction_equals_kernel_on_adversarial_payloads(spark):
     df = spark.createDataFrame(pdf)
     a = {
         r["url"]: r.asDict(recursive=True)
-        for r in extract_documents(df, partitions=3).collect()
+        for r in extract_documents(df).collect()
     }
     assert len(a) == len(payloads)
     for i, payload in enumerate(payloads):

@@ -86,18 +86,6 @@ def test_stream_extract_runs_the_arrow_stage(spark, tmp_path):
     assert python_stages(plan) == ["MapInArrow"], plan
 
 
-def test_paged_extraction_ends_in_the_arrow_stage(spark, tmp_path):
-    """The paged path's cascade stage is the extraction stage's row builder
-    (split and OCR stages stay pandas: they have no twin)."""
-    from archvisier_spark.corpus import corpus_df
-    from archvisier_spark.pipeline.paged import extract_documents_paged
-
-    path = str(tmp_path / "corpus")
-    corpus_df(spark, 10, seed=2, partitions=1).write.parquet(path)
-    plan = plan_of(extract_documents_paged(spark.read.parquet(path)))
-    assert python_stages(plan)[0] == "MapInArrow", plan
-
-
 @pytest.mark.parametrize("name", ["entry", "cascade_metadata"])
 def test_text_in_cascade_runs_the_arrow_stage(spark, name):
     """The flagship and cascade_metadata run the cascade in the extraction
