@@ -22,10 +22,7 @@ SF0001 = "/root/testdata/sf0.001"
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: metadata cascade → spans → lp → new_name over documents."""
     from archvisier_spark.pipeline.extract import new_name_col, with_metadata
-    from archvisier_spark.pipeline.numbering import (
-        with_sequence,
-        with_sequence_sorted,
-    )
+    from archvisier_spark.pipeline.numbering import with_sequence
 
     docs = spark.read.parquet(f"{SF0001}/documents.parquet")
     # map-only: the cascade runs on scan splits — no payload shuffle
@@ -40,26 +37,11 @@ def entry(spark: SparkSession) -> DataFrame:
         "doc_id", "data", "nadawca_odbiorca", "w_sprawie", "numer_dokumentu",
         "sygnatura_sprawy", "typ_dokumentu", "doc_status", "spans", "n_chars",
     )
-    # documents.parquet is written sorted by doc_id, so the flagship takes
-    # the zero-payload-Exchange numbering fast path (round-4 verdict #6):
-    # offsets from a narrow stats pass over the raw scan (keys_df shares
-    # the extraction's scan lineage), sequence = offset + in-partition
-    # record index, validated per row.  An input without the sort order
-    # falls back to the general two-phase rank (the single work_mode group
-    # makes the grouped restart a constant, so both paths agree).
-    try:
-        numbered = with_sequence_sorted(
-            extracted, order_col="doc_id", out_col="lp", keys_df=docs
-        )
-    except ValueError:
-        numbered = with_sequence(
-            extracted.withColumn("work_mode", F.lit("KP")),
-            order_col="doc_id",
-            partition_cols=("work_mode",),
-            out_col="lp",
-        )
-
-    return numbered.withColumn("new_name", new_name_col()).drop("work_mode")
+    # lp = dense rank by doc_id (the two-phase rank every job uses).  The
+    # key slice comes from the raw scan (keys_df): numbering from
+    # `extracted` would run the cascade a second time in the eager pin.
+    numbered = with_sequence(extracted, "doc_id", keys_df=docs)
+    return numbered.withColumn("new_name", new_name_col())
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

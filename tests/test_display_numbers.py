@@ -91,6 +91,21 @@ def test_with_sequence_matches_plain_window_at_sampling_scale(spark):
     assert want.exceptAll(got).count() == 0
 
 
+def test_with_sequence_empty_input_gets_null_lp(spark):
+    """An empty frame has no counts to prefix-sum: it comes back empty with
+    a typed (bigint) lp column instead of failing on the offsets table."""
+    from pyspark.sql import functions as F
+
+    from archvisier_spark.pipeline.numbering import with_sequence
+
+    df = spark.range(0, 400, 1, 4).select(
+        F.format_string("https://ex.org/doc%08d", F.col("id")).alias("url")
+    ).filter(F.lit(False))
+    out = with_sequence(df, "url")
+    assert out.count() == 0
+    assert dict(out.dtypes)["lp"] == "bigint"
+
+
 def test_keys_df_prepass_equivalent(spark):
     """keys_df (pruned-column pre-pass) must yield identical numbering."""
     from archvisier_spark.corpus import corpus_df

@@ -135,11 +135,22 @@ def test_entry_rows_match_kernel_reference(spark):
     assert got == expected
 
 
-def test_entry_plan_has_zero_payload_exchange(spark):
-    """Round-4 verdict #6: the flagship must exhibit the sorted-numbering
-    fast path — no hash/range Exchange anywhere (the only join is the
-    broadcast of the tiny offset table)."""
-    plan = entry_mod.entry(spark)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" not in plan
-    assert "Exchange rangepartitioning" not in plan
-    assert "BroadcastHashJoin" in plan
+def test_entry_numbers_from_the_raw_key_scan(spark, monkeypatch):
+    """The flagship's numbering key slice is the pruned doc_id scan, not the
+    cascade output: with_sequence pins its slice eagerly, so keys taken
+    from the extracted frame would run the cascade a second time."""
+    import archvisier_spark.pipeline.numbering as numbering
+
+    keys = []
+    real = numbering.with_sequence
+
+    def spy(df, *args, keys_df=None, **kwargs):
+        keys.append(keys_df)
+        return real(df, *args, keys_df=keys_df, **kwargs)
+
+    monkeypatch.setattr(numbering, "with_sequence", spy)
+    entry_mod.entry(spark)
+    assert len(keys) == 1 and keys[0] is not None
+    plan = keys[0].select("doc_id")._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in plan
+    assert "MapInArrow" not in plan

@@ -53,111 +53,3 @@ def test_aqe_skew_join_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
 
-
-def test_salted_collect_equals_direct(spark):
-    """90%-hot-key frame: salted two-phase collect_list ≡ direct sorted
-    collect_list, while no phase-1 task holds more than ~1/n_salts of the
-    hot key."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from archvisier_spark.functions.skew import salted_collect_sorted
-
-    rows = [{"k": "hot" if i % 10 else f"cold{i}", "v": f"v{i:05d}"} for i in range(2000)]
-    df = spark.createDataFrame(pd.DataFrame(rows)).repartition(8)
-
-    got = {
-        r["k"]: list(r["values"])
-        for r in salted_collect_sorted(df, "k", "v", n_salts=16).collect()
-    }
-    want = {
-        r["k"]: list(r["values"])
-        for r in df.groupBy("k").agg(
-            F.array_sort(F.collect_list("v")).alias("values")
-        ).collect()
-    }
-    assert got == want
-    assert len(got["hot"]) == 1800
-
-    # phase-1 bound: per-(key,salt) partial sizes stay ~1/16 of the hot key
-    from archvisier_spark.functions.skew import _salt_col
-    partial_sizes = (
-        df.withColumn("__salt", _salt_col(df, 16, ["v"]))
-        .filter(F.col("k") == "hot")
-        .groupBy("__salt").count().collect()
-    )
-    assert max(r["count"] for r in partial_sizes) < 1800 / 4
-
-
-def test_salted_join_equals_plain_join(spark):
-    import pandas as pd
-
-    from archvisier_spark.functions.skew import salted_join
-
-    facts = spark.createDataFrame(pd.DataFrame([
-        {"k": "hot" if i % 20 else f"c{i}", "payload": f"p{i}"} for i in range(1000)
-    ]))
-    dim = spark.createDataFrame(pd.DataFrame([
-        {"k": k, "attr": f"attr_{k}"}
-        for k in ["hot"] + [f"c{i}" for i in range(0, 1000, 20)]
-    ]))
-
-    got = sorted(
-        (r["k"], r["payload"], r["attr"])
-        for r in salted_join(facts, dim, "k", n_salts=8).collect()
-    )
-    want = sorted(
-        (r["k"], r["payload"], r["attr"])
-        for r in facts.join(dim, "k").collect()
-    )
-    assert got == want
-    assert len(got) == 1000
-
-
-def test_salted_collect_spreads_identical_values(spark):
-    """Hot keys often carry IDENTICAL values — salting from the value
-    alone would collapse the hot key back onto one reducer.  The
-    partition-id mix must spread it across salts (round-2 ADVICE)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from archvisier_spark.functions.skew import _salt_col, salted_collect_sorted
-
-    rows = [{"k": "hot", "v": "same"} for _ in range(2000)] + [
-        {"k": f"c{i}", "v": f"v{i}"} for i in range(100)
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows)).repartition(16)
-
-    got = {
-        r["k"]: list(r["values"])
-        for r in salted_collect_sorted(df, "k", "v", n_salts=16).collect()
-    }
-    assert got["hot"] == ["same"] * 2000
-
-    salts = (
-        df.withColumn("__salt", _salt_col(df, 16, ["v"]))
-        .filter(F.col("k") == "hot")
-        .groupBy("__salt").count().collect()
-    )
-    assert len(salts) > 1, "identical-value hot key collapsed onto one salt"
-    assert max(r["count"] for r in salts) < 2000  # no single-reducer hotspot
-
-
-def test_salted_join_key_only_facts(spark):
-    """facts with NO non-key columns must not crash (xxhash64 with zero
-    args) — the guard salts from the key + partition id instead."""
-    import pandas as pd
-
-    from archvisier_spark.functions.skew import salted_join
-
-    facts = spark.createDataFrame(
-        pd.DataFrame([{"k": "hot" if i % 5 else f"c{i}"} for i in range(500)])
-    ).repartition(8)
-    dim = spark.createDataFrame(pd.DataFrame(
-        [{"k": k, "attr": f"a_{k}"} for k in ["hot"] + [f"c{i}" for i in range(0, 500, 5)]]
-    ))
-    got = sorted(
-        (r["k"], r["attr"]) for r in salted_join(facts, dim, "k", n_salts=8).collect()
-    )
-    want = sorted((r["k"], r["attr"]) for r in facts.join(dim, "k").collect())
-    assert got == want and len(got) == 500
