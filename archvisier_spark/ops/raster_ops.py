@@ -25,6 +25,7 @@ from pyspark.sql import functions as F, types as T
 
 from archvisier_spark.kernel.fake_raster import FAKE_RASTER_ENGINE
 from archvisier_spark.kernel.pdf import build_pdf
+from archvisier_spark.session import local_frame
 
 _IN_SCHEMA = T.StructType([
     T.StructField("url", T.StringType(), False),
@@ -84,7 +85,7 @@ def q_extract_raster_ocr(spark, sf_dir):
 
     rows = [(url, None, payload, "pl") for url, payload in _raster_cases()]
     ext = extract_documents(
-        spark.createDataFrame(rows, _IN_SCHEMA),
+        local_frame(spark, rows, _IN_SCHEMA),
         language="auto",
         ocr_mode="raster",
         ocr_engine=FAKE_RASTER_ENGINE,

@@ -11,7 +11,9 @@ sanctioned escape hatch is one Arrow-batched pandas UDF.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
+
+from archvisier_spark.session import local_frame
 
 # Tiny English stopword list for the quality heuristic (public knowledge).
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -294,7 +296,10 @@ def q_dictionary_correction(spark, sf_dir):
     toks = docs.select(
         "doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "tok")
     )
-    dict_df = spark.createDataFrame([(w,) for w in CORRECTION_DICT], ["dict_word"])
+    dict_df = local_frame(
+        spark, [(w,) for w in CORRECTION_DICT],
+        T.StructType([T.StructField("dict_word", T.StringType())]),
+    )
     in_dict = toks.join(
         F.broadcast(dict_df), toks.tok == dict_df.dict_word, "left_semi"
     ).withColumn("word", F.col("tok"))
@@ -373,10 +378,8 @@ GROUP BY doc_id
 
 import pandas as _pd
 
-from pyspark.sql import types as _T
 
-
-@F.pandas_udf(_T.StringType())
+@F.pandas_udf(T.StringType())
 def nfc_normalize_udf(texts: _pd.Series) -> _pd.Series:
     import unicodedata
 
@@ -463,8 +466,6 @@ def q_charset_transport(spark, sf_dir):
     the transport-honored UTF-16 tier become driver-visible
     (kernel/charset.py, pipeline/extract.py content_type propagation).
     sf_dir-independent: the fixture IS the deterministic corpus."""
-    from pyspark.sql import types as T
-
     from archvisier_spark.pipeline.extract import extract_documents
 
     schema = T.StructType([
@@ -478,7 +479,7 @@ def q_charset_transport(spark, sf_dir):
         (f"warc://charset/case-{cid}", None, payload, "pl", ct)
         for cid, ct, payload in _charset_cases()
     ]
-    ext = extract_documents(spark.createDataFrame(rows, schema))
+    ext = extract_documents(local_frame(spark, rows, schema))
     return ext.select("url", "extracted_text", "status", "format")
 
 

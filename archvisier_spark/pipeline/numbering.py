@@ -9,8 +9,15 @@ module implements the classic two-phase dense-rank:
   1. range-repartition a NARROW slice (keys only) by the order column —
      partition *i* holds a contiguous key range below partition *i+1*;
   2. ``row_number`` within each partition (parallel, no global shuffle);
-  3. collect per-partition counts (one tiny row per partition), prefix-sum
-     them on the driver, broadcast the offsets back, add.
+  3. collect per-partition counts (one tiny row per partition and group),
+     prefix-sum them on the driver into the offsets table, broadcast-join
+     it back, add.  The offsets are a driver-local Arrow relation: Spark
+     plans them as a ``LocalTableScan``, so building them starts no Spark
+     job, and broadcasting them starts no Python worker.
+
+Group columns match null-safely: rows whose group value is null (a
+document without a timestamp has no year) form a group of their own, as
+in SQL ``GROUP BY``, and are numbered like any other group.
 
 The full-width payload never moves through the numbering shuffle; numbers
 re-attach with an equi-join on the unique key.  That re-attach join is
@@ -34,7 +41,9 @@ from collections import Counter
 from itertools import groupby
 from typing import Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+
+from archvisier_spark.session import local_frame
 
 
 def with_sequence(
@@ -96,12 +105,6 @@ def with_sequences(
         slim.groupBy("__pid", *group_cols).agg(F.count("*").alias("__cnt")).collect(),
         key=lambda r: r["__pid"],
     )
-    if not counts:
-        # empty input: createDataFrame([]) can't infer a schema — return the
-        # (empty) frame with typed null sequence columns instead of crashing
-        for out_col in outs:
-            df = df.withColumn(out_col, F.lit(None).cast("long"))
-        return df
     running = [Counter() for _ in outs]
     offset_rows = []
     for _, block in groupby(counts, key=lambda r: r["__pid"]):
@@ -117,14 +120,34 @@ def with_sequences(
         for row in block:
             for run, cols in zip(running, outs.values()):
                 run[tuple(row[c] for c in cols)] += row["__cnt"]
-    offsets = spark.createDataFrame(
-        offset_rows, [*group_cols, "__pid", *(f"__off_{o}" for o in outs)]
-    )
+    # the offsets' key columns carry a prefix so that the null-safe join
+    # below names each side's columns apart.  Empty input gives an empty
+    # table, so the result is empty with typed bigint sequence columns.
+    offsets = local_frame(spark, offset_rows, T.StructType([
+        *(T.StructField(f"__o_{c}", slim.schema[c].dataType) for c in group_cols),
+        T.StructField("__o_pid", T.IntegerType()),
+        *(T.StructField(f"__off_{o}", T.LongType()) for o in outs),
+    ]))
 
-    numbered = slim.join(F.broadcast(offsets), [*group_cols, "__pid"]).select(
-        *key_cols,
+    # group columns match null-safely (a null year is a group of its own,
+    # as in SQL GROUP BY); the partition id and the order column match
+    # with plain equality
+    numbered = slim.join(
+        F.broadcast(offsets),
+        [F.col("__pid") == F.col("__o_pid"), *_null_safe_eq(group_cols, "__o_")],
+    ).select(
+        *(F.col(c).alias(f"__k_{c}") for c in key_cols),
         *((F.col(f"__off_{o}") + F.col(f"__rn_{o}")).cast("long").alias(o)
           for o in outs),
     )
-    return df.join(numbered, key_cols)
+    payload = [c for c in df.columns if c not in key_cols]
+    return df.join(
+        numbered,
+        [F.col(order_col) == F.col(f"__k_{order_col}"),
+         *_null_safe_eq(group_cols, "__k_")],
+    ).select(*key_cols, *payload, *outs)
 
+
+def _null_safe_eq(cols: Sequence[str], prefix: str) -> list[Column]:
+    """``c <=> {prefix}c`` for every column: nulls match each other."""
+    return [F.col(c).eqNullSafe(F.col(f"{prefix}{c}")) for c in cols]

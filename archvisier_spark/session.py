@@ -26,8 +26,12 @@ or more tasks of whole files.
 from __future__ import annotations
 
 import os
+from typing import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Arrow transfer batch: 512 rows ≈ 1-4 MB for median web docs; a batch
 # containing one megabyte-scale PDF stays bounded because such rows are
@@ -87,3 +91,19 @@ def get_spark(
             spark.conf.set(key, str(default))
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: StructType
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` typed by ``schema``.
+
+    It is built from an Arrow table, which Spark plans as a
+    ``LocalTableScan``: building it starts no Spark job, and reading it
+    starts no Python worker.  ``createDataFrame`` over a Python list
+    instead pickles the rows through a ``PythonRDD``, and every plan that
+    reads them runs Python workers to unpickle them."""
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    arrays = [pa.array(col, type=f.type) for col, f in zip(columns, arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)

@@ -30,8 +30,12 @@ SKEW_FACTOR = 500
 # zstd at rest: 3× smaller than snappy on this payload — the codec a real
 # 100 TB table would use
 CORPUS_CODEC = "zstd"
+# fine-grained files (≈940 docs each, 1–256 of them): the map-only
+# extraction stage inherits its task granularity from input splits, and
+# a smoke corpus stays a few files instead of one tiny file per document
+CORPUS_FILES = min(256, max(1, -(-N_DOCS // 940)))
 CORPUS_PATH = (
-    f"/tmp/archvisier_bench_corpus_n{N_DOCS}_s{CORPUS_SEED}"
+    f"/tmp/archvisier_bench_corpus_n{N_DOCS}_f{CORPUS_FILES}_s{CORPUS_SEED}"
     f"_k{SKEW_EVERY}x{SKEW_FACTOR}_{CORPUS_CODEC}.parquet"
 )
 
@@ -56,11 +60,9 @@ def ensure_corpus(spark) -> str:
     if not os.path.exists(CORPUS_PATH):
         from archvisier_spark.corpus import corpus_df
 
-        # fine-grained files (≈940 docs each): the map-only extraction
-        # stage inherits its task granularity from input splits
         corpus_df(
             spark, N_DOCS, seed=CORPUS_SEED,
-            skew_every=SKEW_EVERY, skew_factor=SKEW_FACTOR, partitions=256,
+            skew_every=SKEW_EVERY, skew_factor=SKEW_FACTOR, partitions=CORPUS_FILES,
         ).write.mode("overwrite").option("compression", CORPUS_CODEC).parquet(CORPUS_PATH)
     return CORPUS_PATH
 

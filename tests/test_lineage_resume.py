@@ -227,6 +227,47 @@ def test_finalize_names_matches_separate_numbering(spark, tmp_path, mode):
     assert len({ts.year for _, ts, *_rest in rows}) == 4
 
 
+def test_null_year_rows_are_numbered_not_dropped(spark, tmp_path):
+    """A document without a timestamp has no year.  It keeps its place in
+    the url-ordered lp, its null year is an lp_year group of its own (as
+    SQL GROUP BY treats a null) and its display number is NULL: the
+    year-keyed numbering joins must not drop it."""
+    from datetime import datetime
+
+    from archvisier_spark.pipeline.extract import with_display_numbers
+
+    n = 40
+    rows = [
+        (f"https://archiwum.example/{(i * 17) % n:04d}",
+         None if i % 10 == 3 else datetime(2022 + i % 2, 1 + i % 12, 1),
+         "", "", "", "", "", i % N_CHUNKS)
+        for i in range(n)
+    ]
+    path = str(tmp_path / "out")
+    spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, sygnatura_sprawy string, "
+        "numer_dokumentu string, nadawca_odbiorca string, typ_dokumentu string, "
+        "w_sprawie string, chunk_id int",
+    ).write.partitionBy("chunk_id").parquet(path)
+
+    named = sorted(finalize_names(spark, path).collect(), key=lambda r: r["url"])
+    assert [r["lp"] for r in named] == list(range(1, n + 1))
+    years: dict = {}
+    for r in named:  # url order, the numbering order
+        year = r["warc_ts"].year if r["warc_ts"] is not None else None
+        years.setdefault(year, []).append(r["lp_year"])
+        want = None if year is None else f"KP/{r['lp_year']}/{year}"
+        assert r["display_number"] == want, r["url"]
+    assert len(years[None]) == 4
+    for year, seq in years.items():
+        assert seq == list(range(1, len(seq) + 1)), year
+
+    shown = with_display_numbers(spark.read.parquet(path).select("url", "warc_ts"))
+    got = {r["url"]: (r["lp_year"], r["display_number"]) for r in shown.collect()}
+    assert got == {r["url"]: (r["lp_year"], r["display_number"]) for r in named}
+
+
 def test_resume_with_other_n_chunks_is_refused(spark, tmp_path):
     """Chunk ids from pmod(xxhash64(url), 4) name other url sets than
     under 8, so resuming a 4-chunk checkpoint with 8 chunks would write

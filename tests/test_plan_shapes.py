@@ -7,6 +7,8 @@ aggregation, and no accidental cartesian products anywhere in the
 operator inventory.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -170,6 +172,10 @@ def test_numbering_joins_pruned_keys_not_payload(spark, tmp_path):
     # (url, work_mode), never the payload columns
     assert "Scan ExistingRDD[url" in plan
     assert "html" not in plan.split("Scan ExistingRDD[url", 1)[1].split("]", 1)[0]
+    # the offsets table is a driver-local relation, not an RDD of pickled
+    # rows: the pinned key slice is the plan's only RDD scan
+    assert "LocalTableScan [__o_work_mode" in plan
+    assert plan.count("Scan ExistingRDD") == 1
     # exactly one parquet scan feeds the payload (extraction runs once)
     assert plan.count("FileScan parquet") == 1
 
@@ -185,4 +191,9 @@ def test_finalize_numbers_from_one_key_slice(spark, tmp_path):
     extract_documents(corpus_df(spark, 40, seed=4, partitions=2)).write.parquet(path)
     plan = plan_of(finalize_names(spark, path))
     assert plan.count("Scan ExistingRDD[url") == 1
+    assert plan.count("Scan ExistingRDD") == 1
+    # one offsets table for both sequences, built on the driver
+    bare = re.sub(r"#\d+L?", "", plan)  # attribute ids
+    assert bare.count("LocalTableScan [__o_work_mode, __o___year, __o_pid, "
+                      "__off_lp, __off_lp_year]") == 1
     assert plan.count("FileScan parquet") == 1
