@@ -55,12 +55,6 @@ class RasterEngine(NamedTuple):
     detect_fn: Optional[Callable] = None
 
 
-def _text_layer_ocr(page_text: str, _lang: str, _config: str) -> str:
-    """Default per-page 'OCR': the text layer itself (raster OCR binaries
-    are absent in this sandbox; on a cluster, plug real Tesseract here)."""
-    return page_text
-
-
 def ocr_page_auto(page, language: str, ocr_fn, detect_fn=None, config: str = ""):
     """The two-pass auto-language OCR decision (processing/ocr.py:208-226).
 
@@ -85,25 +79,27 @@ def ocr_page_auto(page, language: str, ocr_fn, detect_fn=None, config: str = "")
     return ocr_fn(page, language, config), language
 
 
-# Per-page repair memo for the default text-layer path: scanned corpora
-# repeat page content (blank pages, stamped headers, the bench corpus's
-# ×500 repeated-page skew documents), and the stream memo (kernel/pdf.py)
-# already returns the SAME str object for a repeated stream — this memo
-# lifts that sharing one level, caching the pure page_text → auto-detect →
-# repair composition so a giant repeated-page document pays detect+repair
-# once, not per page.  Applies ONLY when both hooks are the pure defaults
-# (_text_layer_ocr + detect_lang); pluggable engines bypass it.  Bounded
-# by retained chars, same design as _STREAM_MEMO (round-3 ADVICE).
+# The one per-page repair memo: scanned corpora repeat page content
+# (blank pages, stamped headers, the bench corpus's ×500 repeated-page
+# skew documents), and the stream memo (kernel/pdf.py) already returns the
+# SAME str object for a repeated stream — this memo lifts that sharing one
+# level, caching the pure page_text → auto-detect → repair composition so
+# a giant repeated-page document pays detect+repair once, not per page.
+# Keyed before language detection, so a repeated page skips detection
+# too.  Bounded by retained chars, same design as _STREAM_MEMO (round-3
+# ADVICE).
 _REPAIR_MEMO: dict[tuple[str, str], str] = {}
 _REPAIR_MEMO_MAX_CHARS = 1 << 14   # per-page admission cap
 _REPAIR_MEMO_BUDGET = 16 << 20     # total retained key+value chars/worker
 _repair_memo_chars = 0
 
 
-def _repair_page_default(page_text: str, language: str) -> str:
-    """Default-path per-page repair (text-layer OCR + auto-language +
+def _repair_page(page_text: str, language: str) -> str:
+    """Per-page repair of a text-layer page (auto-language +
     :func:`correct_text`) — a pure function of (page_text, language),
-    memoized under the retained-chars budget."""
+    memoized under the retained-chars budget.  The text layer is the
+    page's OCR text, so the two-pass decision of :func:`ocr_page_auto`
+    reduces to one detection on the page itself."""
     global _repair_memo_chars
     small = len(page_text) <= _REPAIR_MEMO_MAX_CHARS
     key = (language, page_text)
@@ -112,8 +108,9 @@ def _repair_page_default(page_text: str, language: str) -> str:
             return _REPAIR_MEMO[key]
         except KeyError:
             pass
-    text_page, lang = ocr_page_auto(page_text, language, _text_layer_ocr)
-    out = correct_text(text_page, lang)
+    if language == "auto":
+        language = "pol" if detect_lang(page_text) == "pl" else "eng"
+    out = correct_text(page_text, language)
     if small:
         size = len(page_text) + len(out)
         if _repair_memo_chars + size > _REPAIR_MEMO_BUDGET:
@@ -124,31 +121,16 @@ def _repair_page_default(page_text: str, language: str) -> str:
     return out
 
 
-def extract_pdf_text(
-    payload: bytes,
-    language: str = "auto",
-    ocr_fn=None,
-    detect_fn=None,
-    config: str = "",
-) -> tuple[str, str]:
-    """PDF path: pages → (auto-language OCR decision) → repair → concat
+def extract_pdf_text(payload: bytes, language: str = "auto") -> tuple[str, str]:
+    """PDF path: text-layer pages → per-page language → repair → concat
     (+"\\n" per page, processing/ocr.py:227-231)."""
-    per_page_ocr = ocr_fn or _text_layer_ocr
-    default_path = (per_page_ocr is _text_layer_ocr and detect_fn is None
-                    and not config)
     try:
         pages = pdf_page_texts(payload)
         if not pages:
             return EMPTY_PDF_TEXT, ""
         parts: list[str] = []
         for page_text in pages:
-            if default_path:
-                parts.append(_repair_page_default(page_text, language))
-            else:
-                text_page, lang = ocr_page_auto(
-                    page_text, language, per_page_ocr, detect_fn, config
-                )
-                parts.append(correct_text(text_page, lang))
+            parts.append(_repair_page(page_text, language))
             parts.append("\n")
         return "".join(parts), STATUS_OK
     except Exception as e:

@@ -7,7 +7,6 @@ the diacritics language heuristic of processing/ocr.py:66-70.
 from __future__ import annotations
 
 import re
-from functools import lru_cache
 
 # Reference fallback dictionaries (processing/ocr.py:108-109).  Stored as
 # sorted tuples so nearest-word ties resolve deterministically — the
@@ -18,7 +17,6 @@ POLISH_DICTIONARY: tuple[str, ...] = ("przyklad", "test")
 ENGLISH_DICTIONARY: tuple[str, ...] = ("example", "test")
 
 _TOKEN_SPLIT = re.compile(r"(\W+)")
-_POLISH_CHARS = frozenset("ąćęłńóśżź")
 # C-speed form of `any(ch in "ąćęłńóśżź" for ch in text.lower())`: each
 # uppercase variant lowercases 1:1 to its class member, so searching both
 # cases over the ORIGINAL text is value-equal and skips the .lower() copy
@@ -59,13 +57,8 @@ def _bounded_levenshtein(a: str, b: str, k: int = _CUTOFF) -> int:
     return prev[lb]
 
 
-@lru_cache(maxsize=1 << 16)
 def _repair_word(lower: str, dictionary: tuple[str, ...]) -> str | None:
-    """Replacement word for ``lower``, or None to keep the token.
-
-    Pure function of (token, dictionary) → safe to memoise; OCR text
-    repeats its vocabulary heavily, so the cache turns the per-token DP
-    into a dict lookup on the hot path."""
+    """Replacement word for ``lower``, or None to keep the token."""
     if lower in dictionary:
         return None
     best, best_d = None, _CUTOFF + 1
@@ -76,20 +69,17 @@ def _repair_word(lower: str, dictionary: tuple[str, ...]) -> str | None:
     return best if best_d <= _CUTOFF else None
 
 
-# raw-token memo per dictionary: skips isalpha/lower/lru-hash on repeats —
-# OCR text re-uses its surface vocabulary (incl. separator runs) heavily.
-# Keyed by the dictionary tuple itself (resolved once per correct_text
-# call) and bounded: cleared past 128k distinct tokens so a 100 TB
-# executor can't grow it without limit.
+# The one token memo: raw token → repaired token, per dictionary.  OCR
+# text re-uses its surface vocabulary (incl. separator runs) heavily, so a
+# repeated token skips isalpha, lower and the banded DP.  Keyed by the
+# dictionary tuple itself (resolved once per correct_text call) and
+# bounded: cleared past 128k distinct tokens so a 100 TB executor can't
+# grow it without limit.
 _TOKEN_MEMO: dict[tuple[str, ...], dict[str, str]] = {}
 _TOKEN_MEMO_CAP = 1 << 17
 
 
-def _repair_token(
-    token: str, dictionary: tuple[str, ...], memo: dict[str, str] | None = None
-) -> str:
-    if memo is None:
-        memo = _TOKEN_MEMO.setdefault(dictionary, {})
+def _repair_token(token: str, dictionary: tuple[str, ...], memo: dict[str, str]) -> str:
     out = memo.get(token)
     if out is not None:
         return out
@@ -112,25 +102,6 @@ def correct_text(text: str, lang: str) -> str:
     word (processing/ocr.py:112-130).  ``lang == "pol"`` selects the Polish
     dictionary, anything else English.
     """
-    if len(text) <= _PAGE_MEMO_MAX_CHARS:
-        return _correct_text_cached(text, lang)
-    return _correct_text_impl(text, lang)
-
-
-# Page-level memo: OCR corpora repeat page text heavily (blank pages,
-# headers/footers, and the corpus's ×500 repeated-page skew documents), so
-# whole repaired pages are worth caching.  Bounded twice over: only pages
-# ≤ 4 KB enter the cache, and lru evicts past 32k entries (≤ ~130 MB/worker
-# worst case).  Pure function of (text, lang) → byte-identity unaffected.
-_PAGE_MEMO_MAX_CHARS = 4096
-
-
-@lru_cache(maxsize=1 << 15)
-def _correct_text_cached(text: str, lang: str) -> str:
-    return _correct_text_impl(text, lang)
-
-
-def _correct_text_impl(text: str, lang: str) -> str:
     dictionary = POLISH_DICTIONARY if lang == "pol" else ENGLISH_DICTIONARY
     memo = _TOKEN_MEMO.setdefault(dictionary, {})
     return "".join(
@@ -142,12 +113,6 @@ def detect_lang(text: str) -> str:
     """Diacritics heuristic: any of ``ąćęłńóśżź`` → ``pl``, else ``en``
     (processing/ocr.py:66-70)."""
     return "pl" if _POLISH_RE.search(text) else "en"
-
-
-def tesseract_lang(text: str) -> str:
-    """Map detected language to the OCR language code
-    (processing/ocr.py:210-218): ``pl → pol``, otherwise ``eng``."""
-    return "pol" if detect_lang(text) == "pl" else "eng"
 
 
 def build_ocr_config(config: str, psm: int, oem: int) -> str:

@@ -1,11 +1,11 @@
 """Kernel-backed operators over the driver tables.
 
-These run the byte-parity kernel in Python — the cascade on the
-extraction pipeline's own ``mapInArrow`` metadata stage
-(:func:`~archvisier_spark.pipeline.extract.with_metadata`), the rest inside
-Arrow-batched pandas UDFs — the operators whose Python-``re``/multiset
-semantics deliberately do NOT get translated to JVM regex (SURVEY.md §7
-"regex engine parity").  Where exact SQL parity IS expressible
+The cascade runs the byte-parity kernel in Python on the extraction
+pipeline's own ``mapInArrow`` metadata stage
+(:func:`~archvisier_spark.pipeline.extract.with_metadata`) — its
+Python-``re`` semantics deliberately do NOT get translated to JVM regex
+(SURVEY.md §7 "regex engine parity"); the other operators are JVM
+built-ins.  Where exact SQL parity IS expressible
 (C-multiset token Jaccard), a computed oracle is provided; the cascade itself gets a PINNED-LITERAL oracle (the expected
 output over the deterministic corpus, computed driver-side with the same
 byte-parity kernel and embedded as VALUES — see
@@ -15,12 +15,9 @@ pinned by the differential suite + golden tests.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F, types as T
+from pyspark.sql import functions as F
 
 from archvisier_spark.kernel.cascade import extract_info_from_text
-from archvisier_spark.kernel.smart import find_document_type
-from archvisier_spark.kernel.textfix import correct_text
 from archvisier_spark.pipeline.extract import with_metadata
 
 # q_cascade_metadata's columns after doc_id
@@ -38,16 +35,6 @@ DOC_ENTITY_RULES = (
     ("TYTUL_PISMA", "spark window"),
     ("TYP_DOKUMENTU", "merge"),
 )
-
-
-@F.pandas_udf(T.StringType())
-def doc_type_udf(texts: pd.Series) -> pd.Series:
-    return pd.Series([find_document_type(t or "") for t in texts])
-
-
-@F.pandas_udf(T.StringType())
-def correct_text_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-    return pd.Series([correct_text(t or "", lg) for t, lg in zip(texts, langs)])
 
 
 def q_cascade_metadata(spark, sf_dir):
@@ -343,7 +330,7 @@ def _cascade_metadata_oracle_sql(sf_dir: str | None = None) -> str | None:
     handling); any kernel or plumbing divergence flips the row hash.
     Same literal-embedding family as extraction_roundtrip and the ANN
     plane oracles.  Lazy — never runs at import time (round-3 ADVICE:
-    executors re-import this module for its pandas_udfs)."""
+    executors may re-import this module)."""
     import os
 
     from archvisier_spark.ops.oracle_env import driver_sf_dir

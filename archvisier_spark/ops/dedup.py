@@ -25,7 +25,6 @@ MINHASH_K = 32          # sketch size
 # s ≥ 0.7).  False candidates are cheap — every candidate is re-verified
 # with exact Jaccard before acting — missed true pairs are lost forever.
 LSH_BANDS = 16
-LSH_ROWS = MINHASH_K // LSH_BANDS
 SHINGLE = 3             # token-shingle width
 
 

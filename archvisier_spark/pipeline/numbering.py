@@ -17,7 +17,9 @@ module implements the classic two-phase dense-rank:
 
 Group columns match null-safely: rows whose group value is null (a
 document without a timestamp has no year) form a group of their own, as
-in SQL ``GROUP BY``, and are numbered like any other group.
+in SQL ``GROUP BY``, and are numbered like any other group.  A null in
+the order column is refused with ``ValueError``: it has no place in the
+order.
 
 The full-width payload never moves through the numbering shuffle; numbers
 re-attach with an equi-join on the unique key.  That re-attach join is
@@ -102,9 +104,19 @@ def with_sequences(
     # one row per (physical partition, finest group): tiny — collect +
     # prefix-sum every output's offsets in one pid-ordered sweep
     counts = sorted(
-        slim.groupBy("__pid", *group_cols).agg(F.count("*").alias("__cnt")).collect(),
+        slim.groupBy("__pid", *group_cols)
+        .agg(F.count("*").alias("__cnt"), F.count(order_col).alias("__nn"))
+        .collect(),
         key=lambda r: r["__pid"],
     )
+    # the re-attach join matches the order column with plain equality, so
+    # a null key would silently drop its row: refuse it instead
+    nulls = sum(r["__cnt"] - r["__nn"] for r in counts)
+    if nulls:
+        raise ValueError(
+            f"with_sequences: order column {order_col!r} has {nulls} null "
+            "value(s); a null key has no place in the sequence"
+        )
     running = [Counter() for _ in outs]
     offset_rows = []
     for _, block in groupby(counts, key=lambda r: r["__pid"]):

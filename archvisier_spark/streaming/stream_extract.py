@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from archvisier_spark.pipeline.extract import EXTRACT_SCHEMA, make_extract_arrow
+from archvisier_spark.pipeline.extract import extract_documents
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -39,8 +39,7 @@ def stream_extract(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_path)
     )
-    fn = make_extract_arrow(language, work_mode, "")
-    return stream.select("url", "warc_ts", "html", "lang").mapInArrow(fn, EXTRACT_SCHEMA)
+    return extract_documents(stream, language=language, work_mode=work_mode)
 
 
 def stream_hourly_counts(

@@ -119,3 +119,21 @@ def test_keys_df_prepass_equivalent(spark):
     a = {r["url"]: r["display_number"] for r in plain.collect()}
     b = {r["url"]: r["display_number"] for r in via_keys.collect()}
     assert a == b
+
+
+def test_with_sequence_refuses_null_order_keys(spark):
+    """A null order key has no place in the sequence; the re-attach join
+    would silently drop its row, so numbering raises instead, naming the
+    column and the null count."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from archvisier_spark.pipeline.numbering import with_sequence
+
+    df = spark.range(0, 20, 1, 2).select(
+        F.when(F.col("id") % 10 == 3, F.lit(None))
+        .otherwise(F.format_string("https://ex.org/doc%04d", F.col("id")))
+        .alias("url")
+    )
+    with pytest.raises(ValueError, match=r"'url' has 2 null"):
+        with_sequence(df, "url")
