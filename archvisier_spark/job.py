@@ -17,7 +17,12 @@ Local smoke::
 
 Resumable by construction: re-running the same command after any failure
 skips completed chunks and replaces half-written ones
-(archvisier_spark.pipeline.lineage).
+(archvisier_spark.pipeline.lineage).  ``--finalize`` records what it
+finalized in ``<checkpoint>/_finalized.json`` (a hidden file to Spark's
+parquet reader): the latest lineage ``run_id``, the work mode, the named
+output path and its row count.  A later ``--finalize`` with no chunk run
+since then and the same work mode and path skips the rewrite and reports
+the recorded count, unless the named output is missing.
 """
 
 from __future__ import annotations
@@ -26,6 +31,38 @@ import argparse
 import json
 import sys
 from pathlib import Path
+
+
+FINALIZED_MARKER = "_finalized.json"
+
+
+def _hadoop_path(spark, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
+    configuration: driver-side file access on any filesystem Spark reads,
+    without a Spark job."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def _read_marker(spark, checkpoint: str) -> dict | None:
+    fs, path = _hadoop_path(spark, checkpoint.rstrip("/") + "/" + FINALIZED_MARKER)
+    if not fs.exists(path):
+        return None
+    stream = fs.open(path)
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode())
+    finally:
+        stream.close()
+
+
+def _write_marker(spark, checkpoint: str, state: dict) -> None:
+    fs, path = _hadoop_path(spark, checkpoint.rstrip("/") + "/" + FINALIZED_MARKER)
+    stream = fs.create(path, True)
+    try:
+        stream.write(bytearray(json.dumps(state).encode()))
+    finally:
+        stream.close()
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -108,7 +145,7 @@ def main(argv: list[str] | None = None) -> int:
     # one read of the checkpoint for the whole report: the latest row per
     # chunk gives the done set and the documents it holds
     lineage = lineage_report(spark, args.checkpoint).select(
-        "chunk_id", "status", "n_docs").collect()
+        "chunk_id", "status", "n_docs", "run_id").collect()
     done = {r["chunk_id"] for r in lineage if r["status"] == STATUS_OK}
     report = {
         "chunks_processed_this_run": processed,
@@ -117,18 +154,27 @@ def main(argv: list[str] | None = None) -> int:
     }
 
     if args.finalize and len(done) == args.n_chunks:
-        named = finalize_names(spark, args.output, work_mode=args.work_mode)
-        named.write.mode("overwrite").parquet(args.output.rstrip("/") + "_named")
-        report["finalized_rows"] = spark.read.parquet(
-            args.output.rstrip("/") + "_named"
-        ).count()
+        named_path = args.output.rstrip("/") + "_named"
+        # the latest run that wrote a chunk: the named output is a pure
+        # function of the chunk output, so it is current if it was
+        # finalized after that run, in this work mode, at this path
+        state = {"run_id": max(r["run_id"] for r in lineage),
+                 "work_mode": args.work_mode, "named": named_path}
+        marker = _read_marker(spark, args.checkpoint)
+        fs, named_hpath = _hadoop_path(spark, named_path)
+        if (marker is not None and {k: marker.get(k) for k in state} == state
+                and fs.exists(named_hpath)):
+            report["finalized_rows"] = marker["rows"]
+        else:
+            named = finalize_names(spark, args.output, work_mode=args.work_mode)
+            named.write.mode("overwrite").parquet(named_path)
+            report["finalized_rows"] = spark.read.parquet(named_path).count()
+            _write_marker(spark, args.checkpoint,
+                          {**state, "rows": report["finalized_rows"]})
         if args.export_xlsx:
             from archvisier_spark.pipeline.training import export_results_xlsx
 
-            export_results_xlsx(
-                spark.read.parquet(args.output.rstrip("/") + "_named"),
-                args.export_xlsx,
-            )
+            export_results_xlsx(spark.read.parquet(named_path), args.export_xlsx)
             report["xlsx"] = args.export_xlsx
     elif args.export_xlsx:
         # --finalize given but chunks incomplete this run: say so in the

@@ -25,9 +25,14 @@ _POLISH_RE = re.compile("[ąćęłńóśżźĄĆĘŁŃÓŚŻŹ]")
 # Repair accepts a replacement only at distance ≤ 2, so the argmin over the
 # dictionary only matters for distances ≤ 2 (dictionary words are mutually
 # > 4 apart, so at most one candidate can be within 2 — no ambiguous argmin
-# exists).  That licenses two exact-semantics fast paths: a length
-# pre-filter (|len(a)-len(b)| > 2 ⇒ distance > 2) and a banded DP that
-# gives exact values ≤ 2 and saturates at 3 otherwise.
+# exists).  That licenses three exact-semantics fast paths:
+#   * length: |len(a)-len(b)| > 2 ⇒ distance > 2;
+#   * foreign characters: every character of the token that is not a letter
+#     of the word costs a substitution or a deletion, so a token with more
+#     than 2 of them is more than 2 away.  str.translate with a table that
+#     deletes the word's letters counts them at C speed; almost no token of
+#     real text survives it, so the DP below rarely runs;
+#   * a banded DP that gives exact values ≤ 2 and saturates at 3 otherwise.
 _CUTOFF = 2
 
 
@@ -57,12 +62,21 @@ def _bounded_levenshtein(a: str, b: str, k: int = _CUTOFF) -> int:
     return prev[lb]
 
 
+# word → str.translate table deleting the word's letters, for every
+# dictionary word (built once: the dictionaries are fixed)
+_DELETE_LETTERS = {
+    w: str.maketrans("", "", w) for w in {*POLISH_DICTIONARY, *ENGLISH_DICTIONARY}
+}
+
+
 def _repair_word(lower: str, dictionary: tuple[str, ...]) -> str | None:
     """Replacement word for ``lower``, or None to keep the token."""
     if lower in dictionary:
         return None
     best, best_d = None, _CUTOFF + 1
     for w in dictionary:
+        if len(lower.translate(_DELETE_LETTERS[w])) > _CUTOFF:
+            continue
         d = _bounded_levenshtein(lower, w)
         if d < best_d:
             best, best_d = w, d

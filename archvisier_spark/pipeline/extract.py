@@ -241,12 +241,14 @@ def extract_documents(
     shuffle — on a 32-core box, feeding Arrow batches out of shuffle files
     anti-scaled (32 threads 2.5× slower than 8), while scan-fed batches
     scaled cleanly.  Balance then comes from input splits, sized by the
-    session's one planner rule (``archvisier_spark.session``: about
-    ``4 × cores`` splits per scan, whole small files packed together),
-    which is the right granularity for byte-skewed documents.  The unit of
-    work is the document: every page of a PDF is extracted in the task
-    that reads it.  Writers of the input table control file width; the
-    corpus generator and lineage chunks both emit fine-grained files.
+    session's one planner rule (``archvisier_spark.session``: about one
+    split per core, whole small files packed together, more only when the
+    bytes pass 128 MB a split): every Python task pays a fixed worker
+    setup, so one wave per core beats finer splits even on byte-skewed
+    documents.  The unit of work is the document: every page of a PDF is
+    extracted in the task that reads it.  Writers of the input table
+    control file width; the corpus generator and lineage chunks both emit
+    fine-grained files.
 
     ``ocr_engine``: optional :class:`~archvisier_spark.kernel.document.
     RasterEngine` overriding the raster path's rasterise/OCR/detect hooks
@@ -293,43 +295,6 @@ def observed_extraction(df: DataFrame, **kwargs):
         F.sum((F.col("status") != "Sukces").cast("long")).alias("n_errors"),
     )
     return extracted, obs
-
-
-def with_display_numbers(
-    df: DataFrame,
-    work_mode: str = "KP",
-    ts_col: str = "warc_ts",
-    keys_df: DataFrame | None = None,
-    out_col: str = "display_number",
-) -> DataFrame:
-    """Append the year-scoped counter (``lp_year``) and its display string.
-
-    The reference keeps session counters keyed ``"{work_mode}/{year}"``
-    (SA mode in a separate dict, gui/pdf_processor_app.py:596-616) and
-    renders them with the TYPE_PATTERNS literals ``KP/{num}/{year}`` /
-    ``SA{num}_{year}`` (gui/constants.py:9-13).  Spark form: the two-phase
-    dense-rank numbering partitioned by ``(work_mode, year(ts_col))`` —
-    equal to the sequential counter bumps given sorted input — with the
-    display string built from JVM expressions (no UDF).
-    """
-    year = F.year(F.col(ts_col)).cast("int")
-    base = df.withColumn("work_mode", F.lit(work_mode)).withColumn("__year", year)
-    keys = (
-        keys_df.select("url", ts_col)
-        .withColumn("work_mode", F.lit(work_mode))
-        .withColumn("__year", year)
-        .drop(ts_col)
-        if keys_df is not None
-        else None
-    )
-    numbered = with_sequence(
-        base,
-        order_col="url",
-        partition_cols=("work_mode", "__year"),
-        out_col="lp_year",
-        keys_df=keys,
-    )
-    return numbered.withColumn(out_col, display_number_col(work_mode)).drop("__year")
 
 
 def display_number_col(work_mode: str, year_col: str = "__year") -> Column:

@@ -91,11 +91,6 @@ def _checkpoint_state(
     return done, max((r["run_id"] for r in rows), default=-1) + 1, counts
 
 
-def completed_chunks(spark: SparkSession, checkpoint_path: str) -> set[int]:
-    """Chunk ids with an ``ok`` lineage row (empty checkpoint → none)."""
-    return _checkpoint_state(spark, checkpoint_path)[0]
-
-
 def run_resumable(
     spark: SparkSession,
     docs: DataFrame,

@@ -23,11 +23,18 @@ order.
 
 The full-width payload never moves through the numbering shuffle; numbers
 re-attach with an equi-join on the unique key.  That re-attach join is
-the one place the payload crosses a shuffle (hash by key on both sides) —
-at 10^12 rows it is a single well-partitioned co-shuffle, the standard
-price of attaching a global rank.  This is the engine's only numbering
-algorithm: it assumes nothing about input order, so sorted tables and
-the job's overlapping hash chunks number alike.
+the one place the payload leaves its task, and Spark picks how from size
+estimates: at 10^12 rows it is a co-shuffle (hash by key on both sides),
+the standard price of attaching a global rank.  On small inputs it is
+not: when the payload side is estimated under the broadcast threshold,
+the join broadcasts the whole payload (``BroadcastHashJoin`` building the
+left side: every extracted row is collected on the driver first, so the
+extraction runs as the broadcast's collect), and the stage after it is
+one task, so a naming UDF over the result runs in one Python task.
+
+This is the engine's only numbering algorithm: it assumes nothing about
+input order, so sorted tables and the job's overlapping hash chunks
+number alike.
 AQE partition coalescing is safe here: merged range partitions stay
 contiguous, so offsets remain correct.
 

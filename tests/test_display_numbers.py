@@ -3,10 +3,13 @@
 Reference semantics: session counters keyed ``"{work_mode}/{year}"`` with
 SA mode in a SEPARATE dict (gui/pdf_processor_app.py:590-616), rendered
 with the TYPE_PATTERNS literals ``KP/{num}/{year}`` / ``KW/{num}/{year}``
-/ ``SA{num}_{year}`` (gui/constants.py:9-13).  The Spark form
-(pipeline.extract.with_display_numbers) is differential-tested against
-the sequential counter loop here; per-row SQL parity of the underlying
-two-phase numbering is oracle-checked by the a2_counter_display query.
+/ ``SA{num}_{year}`` (gui/constants.py:9-13).  The Spark form (the
+two-phase numbering partitioned by mode and year, rendered by
+pipeline.extract.display_number_col, as lineage.finalize_names runs it:
+the ``display_numbers`` fixture)
+is differential-tested against the sequential counter loop here; per-row
+SQL parity of the underlying two-phase numbering is oracle-checked by the
+a2_counter_display query.
 """
 
 from archvisier_spark.kernel.naming import (
@@ -45,9 +48,8 @@ def test_sequential_counters_sa_separate():
     assert sa == {"SA/2025": 1}
 
 
-def test_spark_display_numbers_match_sequential_loop(spark):
+def test_spark_display_numbers_match_sequential_loop(spark, display_numbers):
     from archvisier_spark.corpus import corpus_df, generate_rows
-    from archvisier_spark.pipeline.extract import with_display_numbers
 
     n = 50
     docs = corpus_df(spark, n, seed=11, skew_every=10, skew_factor=5, partitions=4)
@@ -55,9 +57,7 @@ def test_spark_display_numbers_match_sequential_loop(spark):
     for mode in ("KP", "SA"):
         got = {
             r["url"]: (r["lp_year"], r["display_number"])
-            for r in with_display_numbers(
-                docs.select("url", "warc_ts"), work_mode=mode
-            ).collect()
+            for r in display_numbers(docs.select("url", "warc_ts"), mode).collect()
         }
         counters: dict = {}
         sa: dict = {}
@@ -106,16 +106,13 @@ def test_with_sequence_empty_input_gets_null_lp(spark):
     assert dict(out.dtypes)["lp"] == "bigint"
 
 
-def test_keys_df_prepass_equivalent(spark):
+def test_keys_df_prepass_equivalent(spark, display_numbers):
     """keys_df (pruned-column pre-pass) must yield identical numbering."""
     from archvisier_spark.corpus import corpus_df
-    from archvisier_spark.pipeline.extract import with_display_numbers
 
     docs = corpus_df(spark, 30, seed=3, skew_every=9, skew_factor=4, partitions=3)
-    plain = with_display_numbers(docs.select("url", "warc_ts"), work_mode="KW")
-    via_keys = with_display_numbers(
-        docs.select("url", "warc_ts"), work_mode="KW", keys_df=docs
-    )
+    plain = display_numbers(docs.select("url", "warc_ts"), "KW")
+    via_keys = display_numbers(docs.select("url", "warc_ts"), "KW", keys_df=docs)
     a = {r["url"]: r["display_number"] for r in plain.collect()}
     b = {r["url"]: r["display_number"] for r in via_keys.collect()}
     assert a == b

@@ -55,6 +55,48 @@ def test_job_cli_synthesize_resume_finalize(tmp_path):
     assert len(sheet.find("m:sheetData", ns)) == 81  # header + 80 rows
 
 
+def test_job_cli_noop_finalize_skips_the_rewrite(tmp_path):
+    """A resume that ran no chunk since the last finalize leaves the named
+    output as it is: it reports the recorded row count from the marker
+    beside the checkpoint and runs about the jobs of a plain no-op resume
+    (5), not a second finalize.  With the named output gone, it finalizes
+    again."""
+    import shutil
+
+    out = str(tmp_path / "out")
+    base = [
+        sys.executable, "archvisier_spark/job.py",
+        "--synthesize", "200",
+        "--output", out,
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--n-chunks", "4",
+        "--master", "local[4]",
+        "--finalize",
+    ]
+
+    def run():
+        r = subprocess.run(base, capture_output=True, text=True, timeout=300)
+        assert r.returncode == 0, r.stderr[-2000:]
+        return json.loads([l for l in r.stdout.splitlines() if l.startswith("{")][-1])
+
+    first = run()
+    assert first["finalized_rows"] == 200
+    named = tmp_path / "out_named"
+    written = sorted(p.name for p in named.iterdir())
+
+    noop = run()
+    assert noop["chunks_processed_this_run"] == []
+    assert noop["finalized_rows"] == 200
+    assert noop["spark_jobs"] <= 6, noop
+    assert sorted(p.name for p in named.iterdir()) == written
+
+    shutil.rmtree(named)
+    again = run()
+    assert again["finalized_rows"] == 200
+    assert again["spark_jobs"] > 6, again
+    assert named.is_dir()
+
+
 def test_job_cli_missing_config_fails_fast(tmp_path):
     """A typo'd --config path must error, not silently fall back to
     defaults and disable auto language detection (round-2 ADVICE)."""

@@ -20,7 +20,12 @@ from archvisier_spark.kernel.similarity import (
     levenshtein_numpy,
 )
 from archvisier_spark.kernel.spans import find_all_occurrences
-from archvisier_spark.kernel.textfix import correct_text
+from archvisier_spark.kernel.textfix import (
+    ENGLISH_DICTIONARY,
+    POLISH_DICTIONARY,
+    _repair_word,
+    correct_text,
+)
 
 # PDF content streams carry any text except newlines inside a line
 pdf_line = st.text(
@@ -49,6 +54,50 @@ def test_correct_text_preserves_separators_and_length_structure(text, lang):
     import re
 
     assert re.sub(r"\w+", "", out) == re.sub(r"\w+", "", text)
+
+
+# characters whose lower() changes length (İ → i + combining dot) or maps
+# to another non-ASCII letter (ẞ → ß, ǅ → ǆ, Σ → σ)
+_CASE_SHIFTERS = "İẞǅΣ"
+
+
+@st.composite
+def near_dictionary_words(draw):
+    """A dictionary word after 0–4 random insertions, deletions and
+    substitutions, drawn over its own letters, Polish letters and
+    case-shifting characters."""
+    chars = list(draw(st.sampled_from(["test", "przyklad", "example"])))
+    alphabet = st.characters(blacklist_categories=("Cs",)) | st.sampled_from(
+        list("testprzykladexampleąćęłńóśżź" + _CASE_SHIFTERS)
+    )
+    for _ in range(draw(st.integers(0, 4))):
+        op = draw(st.sampled_from(["insert", "delete", "substitute"]))
+        i = draw(st.integers(0, len(chars)))
+        if op == "insert":
+            chars.insert(i, draw(alphabet))
+        elif chars:
+            i = min(i, len(chars) - 1)
+            if op == "delete":
+                del chars[i]
+            else:
+                chars[i] = draw(alphabet)
+    return "".join(chars)
+
+
+@settings(max_examples=1500, deadline=None)
+@given(near_dictionary_words()
+       | st.text(max_size=12)
+       | st.text(alphabet=st.sampled_from(list("estxampl" + _CASE_SHIFTERS)),
+                 max_size=10))
+def test_repair_word_is_the_nearest_dictionary_word(token):
+    """The prefilters in front of the repair DP reject only tokens that are
+    more than 2 edits from every word: the repair equals the brute-force
+    argmin over the sorted dictionary by full Levenshtein distance."""
+    lower = token.lower()
+    for dictionary in (POLISH_DICTIONARY, ENGLISH_DICTIONARY):
+        d, word = min((levenshtein(lower, w), w) for w in dictionary)
+        want = word if 0 < d <= 2 else None
+        assert _repair_word(lower, dictionary) == want, (token, dictionary)
 
 
 @settings(max_examples=200, deadline=None)

@@ -8,7 +8,6 @@ from archvisier_spark.corpus import corpus_df
 from archvisier_spark.pipeline.extract import extract_documents
 from archvisier_spark.pipeline.lineage import (
     chunk_id_col,
-    completed_chunks,
     finalize_names,
     lineage_report,
     run_resumable,
@@ -21,6 +20,12 @@ N_CHUNKS = 8
 @pytest.fixture()
 def docs(spark):
     return corpus_df(spark, N_DOCS, seed=9, partitions=4)
+
+
+def _done(spark, ckpt):
+    """Chunk ids whose latest lineage row is ``ok``."""
+    return {r["chunk_id"] for r in lineage_report(spark, ckpt).collect()
+            if r["status"] == "ok"}
 
 
 def _single_shot(spark, docs):
@@ -116,8 +121,11 @@ def test_finalize_names_dense_sequence(spark, docs, tmp_path):
         assert seq == list(range(1, len(seq) + 1)), year
 
 
-def test_completed_chunks_empty_checkpoint(spark, tmp_path):
-    assert completed_chunks(spark, str(tmp_path / "missing")) == set()
+def test_missing_checkpoint_means_no_chunk_is_done(spark, docs, tmp_path):
+    ckpt = str(tmp_path / "missing")
+    assert run_resumable(spark, docs, str(tmp_path / "out"), ckpt,
+                         n_chunks=N_CHUNKS, max_chunks_per_run=2) == [0, 1]
+    assert _done(spark, ckpt) == {0, 1}
 
 
 def test_legacy_checkpoint_without_run_id(spark, docs, tmp_path):
@@ -165,7 +173,7 @@ def test_resume_redoes_failed_chunk_under_next_run_id(spark, docs, tmp_path):
         "status string, run_id int",
     ).write.parquet(ckpt)
 
-    assert completed_chunks(spark, ckpt) == set(range(N_CHUNKS)) - {c}
+    assert _done(spark, ckpt) == set(range(N_CHUNKS)) - {c}
     assert run_resumable(spark, docs, out, ckpt, n_chunks=N_CHUNKS) == [c]
     in_chunk = docs.filter(chunk_id_col(F.col("url"), N_CHUNKS) == c).count()
     latest = {r["chunk_id"]: r for r in lineage_report(spark, ckpt).collect()}
@@ -175,14 +183,15 @@ def test_resume_redoes_failed_chunk_under_next_run_id(spark, docs, tmp_path):
 
 
 @pytest.mark.parametrize("mode", ["KP", "SA"])
-def test_finalize_names_matches_separate_numbering(spark, tmp_path, mode):
+def test_finalize_names_matches_separate_numbering(spark, display_numbers, tmp_path,
+                                                   mode):
     """The fused lp + lp_year pass equals the two separate passes
-    (with_new_names, then with_display_numbers) over a chunk output that
-    spans four warc_ts years and every range partition."""
+    (with_new_names, then the year-scoped numbering) over a chunk output
+    that spans four warc_ts years and every range partition."""
     from datetime import datetime
 
     from archvisier_spark.kernel.naming import counter_key, next_display_number
-    from archvisier_spark.pipeline.extract import with_display_numbers, with_new_names
+    from archvisier_spark.pipeline.extract import with_new_names
 
     n = 400
     rows = [
@@ -210,9 +219,9 @@ def test_finalize_names_matches_separate_numbering(spark, tmp_path, mode):
     cols = ["lp", "lp_year", "display_number", "new_name"]
     fused = {r["url"]: tuple(r[c] for c in cols)
              for r in finalize_names(spark, path, work_mode=mode).collect()}
-    separate = with_display_numbers(
+    separate = display_numbers(
         with_new_names(spark.read.parquet(path).drop("chunk_id"), work_mode=mode),
-        work_mode=mode,
+        mode,
     )
     want = {r["url"]: tuple(r[c] for c in cols) for r in separate.collect()}
     assert fused == want
@@ -227,14 +236,12 @@ def test_finalize_names_matches_separate_numbering(spark, tmp_path, mode):
     assert len({ts.year for _, ts, *_rest in rows}) == 4
 
 
-def test_null_year_rows_are_numbered_not_dropped(spark, tmp_path):
+def test_null_year_rows_are_numbered_not_dropped(spark, display_numbers, tmp_path):
     """A document without a timestamp has no year.  It keeps its place in
     the url-ordered lp, its null year is an lp_year group of its own (as
     SQL GROUP BY treats a null) and its display number is NULL: the
     year-keyed numbering joins must not drop it."""
     from datetime import datetime
-
-    from archvisier_spark.pipeline.extract import with_display_numbers
 
     n = 40
     rows = [
@@ -263,7 +270,7 @@ def test_null_year_rows_are_numbered_not_dropped(spark, tmp_path):
     for year, seq in years.items():
         assert seq == list(range(1, len(seq) + 1)), year
 
-    shown = with_display_numbers(spark.read.parquet(path).select("url", "warc_ts"))
+    shown = display_numbers(spark.read.parquet(path).select("url", "warc_ts"), "KP")
     got = {r["url"]: (r["lp_year"], r["display_number"]) for r in shown.collect()}
     assert got == {r["url"]: (r["lp_year"], r["display_number"]) for r in named}
 
@@ -283,7 +290,7 @@ def test_resume_with_other_n_chunks_is_refused(spark, tmp_path):
     with pytest.raises(ValueError, match=r"n_chunks=\[4\].*n_chunks=8"):
         run_resumable(spark, docs, out, ckpt, n_chunks=8)
     assert spark.read.parquet(out).count() == written
-    assert completed_chunks(spark, ckpt) == {0, 1}
+    assert _done(spark, ckpt) == {0, 1}
 
     assert run_resumable(spark, docs, out, ckpt, n_chunks=4) == [2, 3]
     final = spark.read.parquet(out)

@@ -35,11 +35,11 @@ def test_extraction_is_map_only_and_pruned(spark, tmp_path):
     assert "html" in read_schema
 
 
-def test_multi_file_corpus_plans_one_split_per_file(spark, tmp_path):
+def test_multi_file_corpus_plans_one_split_per_core(spark, tmp_path):
     """Sixteen small corpus files under the session's planner rule
-    (minPartitionNum = 4 × cores = 16 on local[4], openCostInBytes as
-    each file's weight): one scan task per file, fed straight into the
-    map-only extraction stage."""
+    (minPartitionNum = cores = 4 on local[4], openCostInBytes as each
+    file's weight): one scan task per core, each reading whole files,
+    fed straight into the map-only extraction stage."""
     from archvisier_spark.corpus import corpus_df
     from archvisier_spark.pipeline.extract import extract_documents
 
@@ -47,11 +47,22 @@ def test_multi_file_corpus_plans_one_split_per_file(spark, tmp_path):
     corpus_df(spark, 400, seed=2, partitions=16).write.parquet(path)
     n_files = len(list((tmp_path / "corpus").glob("*.parquet")))
     assert n_files == 16
-    assert int(spark.conf.get("spark.sql.files.minPartitionNum")) == (
-        4 * spark.sparkContext.defaultParallelism)
+    cores = spark.sparkContext.defaultParallelism
+    assert int(spark.conf.get("spark.sql.files.minPartitionNum")) == cores
     out = extract_documents(spark.read.parquet(path))
     assert "Exchange" not in plan_of(out)
-    assert out.rdd.getNumPartitions() == n_files
+    assert out.rdd.getNumPartitions() == cores < n_files
+    # whole files: every file's rows come out of one scan task
+    tasks_per_file = (
+        spark.read.parquet(path)
+        .select(F.input_file_name().alias("file"), F.spark_partition_id().alias("task"))
+        .distinct()
+        .groupBy("file")
+        .count()
+        .collect()
+    )
+    assert len(tasks_per_file) == n_files
+    assert {r["count"] for r in tasks_per_file} == {1}
 
 
 @pytest.mark.parametrize("table", ["region", "nation", "customer", "supplier", "part",
