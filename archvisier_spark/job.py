@@ -1,6 +1,6 @@
 """spark-submit entrypoint — the north rule's packaging surface.
 
-Usage (cluster)::
+Usage (cluster; the master and ``--conf`` settings come from spark-submit)::
 
     scripts/package.sh                         # builds dist/engine.zip
     spark-submit --py-files dist/engine.zip \\
@@ -10,7 +10,7 @@ Usage (cluster)::
         --checkpoint s3://bucket/extract_ckpt \\
         --n-chunks 4096 --finalize
 
-Local smoke::
+Local smoke (on Spark's ``local[*]``)::
 
     python archvisier_spark/job.py --synthesize 200 \\
         --output /tmp/out --checkpoint /tmp/ckpt --n-chunks 8 --finalize
@@ -65,16 +65,23 @@ def _write_marker(spark, checkpoint: str, state: dict) -> None:
         stream.close()
 
 
+def _count(text: str) -> int:
+    """argparse type of a count that must be at least 1."""
+    if int(text) < 1:
+        raise argparse.ArgumentTypeError(f"must be at least 1, got {text}")
+    return int(text)
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description="ArchVisier-Spark extraction job")
     src = p.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="parquet/Iceberg path of documents_web table")
-    src.add_argument("--synthesize", type=int, metavar="N",
+    src.add_argument("--synthesize", type=_count, metavar="N",
                      help="generate an N-doc deterministic corpus instead of reading input")
     p.add_argument("--output", required=True)
     p.add_argument("--checkpoint", required=True)
-    p.add_argument("--n-chunks", type=int, default=64)
-    p.add_argument("--max-chunks-per-run", type=int, default=None)
+    p.add_argument("--n-chunks", type=_count, default=64)
+    p.add_argument("--max-chunks-per-run", type=_count, default=None)
     p.add_argument("--language", default=None,
                    help="OCR language (default: config file's ocr_language, or auto)")
     p.add_argument("--work-mode", default="KP")
@@ -88,7 +95,7 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--config", default=None,
                    help="config.json path (S11: reference-compatible keys incl. "
                         "ocr_language/ocr_psm/ocr_oem; odd-kernel coercion applied)")
-    p.add_argument("--master", default=None, help="override master (default: spark-submit's)")
+    p.add_argument("--master", default=None, help="master (default: spark-submit's, else local[*])")
     p.add_argument("--finalize", action="store_true",
                    help="after all chunks complete, write numbered+named output")
     p.add_argument("--export-xlsx", default=None, metavar="PATH",
@@ -127,7 +134,7 @@ def main(argv: list[str] | None = None) -> int:
     last_job = max(tracker.getJobIdsForGroup(), default=-1)
     docs = (
         corpus_df(spark, args.synthesize, skew_every=100, skew_factor=500)
-        if args.synthesize
+        if args.synthesize is not None
         else spark.read.parquet(args.input)
     )
 

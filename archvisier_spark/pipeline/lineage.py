@@ -108,10 +108,13 @@ def run_resumable(
     a job dying partway; operationally it bounds blast radius per retry).
     Safe to re-run after any failure: finished chunks are skipped via the
     lineage table, half-written chunks are overwritten whole.  Raises
-    ``ValueError`` if the checkpoint was written with another
-    ``n_chunks``: its chunk ids name other url sets, so resuming would
-    write some documents twice.
+    ``ValueError`` if ``n_chunks`` or ``max_chunks_per_run`` is below 1,
+    or if the checkpoint was written with another ``n_chunks``: its chunk
+    ids name other url sets, so resuming would write some documents twice.
     """
+    if n_chunks < 1 or (max_chunks_per_run is not None and max_chunks_per_run < 1):
+        raise ValueError(f"n_chunks={n_chunks} and max_chunks_per_run="
+                         f"{max_chunks_per_run} must be at least 1")
     done, run_id, counts = _checkpoint_state(spark, checkpoint_path)
     if counts - {n_chunks}:
         raise ValueError(

@@ -1,9 +1,26 @@
-"""SparkSession builder tuned for the extraction workload.
+"""The engine's SparkSession: what the caller or the launcher sets wins
+(``master``, ``extra_conf``, ``spark-submit --master/--conf``,
+``PYSPARK_SUBMIT_ARGS``), and the engine fills the gaps.
 
-Local-mode settings mirror what a 1000-executor cluster job would set via
-``spark-submit --conf`` (SURVEY.md §4): AQE on (runtime coalesce + skew-join
-split), Arrow transfer on with bounded batch size (MB-scale binary payloads
-→ keep batches small, SURVEY.md §7 "MB-scale binary rows").
+With no ``master`` argument Spark resolves the master: spark-submit's
+``--master``, then ``PYSPARK_SUBMIT_ARGS``, then ``local[*]``.  Pinned on
+the builder, over the launcher: ``spark.sql.session.timeZone=UTC``
+(``lp_year`` and ``display_number`` come from ``year(warc_ts)``, so the
+output bytes depend on it), and the static ``spark.ui.enabled=false`` and
+``spark.driver.memory`` (env ``SPARK_DRIVER_MEMORY``, default 16g), read
+only when the JVM starts.  Once the context is up, each key that nothing
+has set gets its default (AQE is left at Spark's default, on)::
+
+    spark.sql.shuffle.partitions                   defaultParallelism
+    spark.sql.files.minPartitionNum                defaultParallelism
+    spark.sql.files.openCostInBytes                16m
+    spark.sql.execution.arrow.pyspark.enabled      true
+    spark.sql.execution.arrow.useLargeVarTypes     true
+    spark.sql.execution.arrow.maxRecordsPerBatch   ARROW_BATCH_ROWS
+
+On a cluster, ``defaultParallelism`` is read once at session start and
+can read low before the executors register: set both partition keys
+with ``--conf`` there.
 
 This is the only place the engine sets Spark conf; no query changes it
 while it is built or run.  Scan splits follow Spark's own planner rule,
@@ -49,48 +66,31 @@ ARROW_BATCH_ROWS = 512
 def get_spark(
     master: str | None = None,
     app_name: str = "archvisier_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # pinned over the launcher: the output bytes depend on the zone,
+        # and the other two are read only when the JVM starts
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 64-bit Arrow offsets: one contiguous buffer for megabyte binary
-        # payloads instead of 2 GiB-bounded chunked arrays
-        .config("spark.sql.execution.arrow.useLargeVarTypes", "true")
-        .config("spark.sql.files.openCostInBytes", "16m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    # Master resolution: an explicit argument wins; otherwise inherit
-    # spark.master from spark-submit / existing conf (cluster usage per
-    # job.py --master help text); local[N] is only the last-resort default
-    # when nothing has configured a master at all.
     if master:
         builder = builder.master(master)
-    else:
-        try:
-            from pyspark import SparkConf
-
-            has_master = SparkConf().contains("spark.master")
-        except Exception:
-            has_master = False
-        if not has_master:
-            builder = builder.master(f"local[{cpus}]")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # defaults that an explicit setting (extra_conf, spark-submit --conf)
-    # overrides; the core count is known only once the context is up
+    cores = spark.sparkContext.defaultParallelism
     for key, default in (
+        ("spark.sql.shuffle.partitions", cores),
+        ("spark.sql.files.minPartitionNum", cores),
+        ("spark.sql.files.openCostInBytes", "16m"),
+        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+        # 64-bit Arrow offsets: one contiguous buffer for megabyte binary
+        # payloads instead of 2 GiB-bounded chunked arrays
+        ("spark.sql.execution.arrow.useLargeVarTypes", "true"),
         ("spark.sql.execution.arrow.maxRecordsPerBatch", ARROW_BATCH_ROWS),
-        ("spark.sql.files.minPartitionNum", spark.sparkContext.defaultParallelism),
     ):
         if spark.conf.get(key, None) is None:
             spark.conf.set(key, str(default))

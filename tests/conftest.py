@@ -5,8 +5,9 @@ import pytest
 def spark():
     from archvisier_spark.session import get_spark
 
-    spark = get_spark(master="local[4]", shuffle_partitions=8,
-                      extra_conf={"spark.driver.memory": "4g"})
+    spark = get_spark(master="local[4]",
+                      extra_conf={"spark.sql.shuffle.partitions": "8",
+                                  "spark.driver.memory": "4g"})
     yield spark
     spark.stop()
 

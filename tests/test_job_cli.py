@@ -4,6 +4,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 
 def test_job_cli_synthesize_resume_finalize(tmp_path):
     out = str(tmp_path / "out")
@@ -111,6 +113,28 @@ def test_job_cli_missing_config_fails_fast(tmp_path):
     )
     assert r.returncode != 0
     assert "not found" in r.stderr
+
+
+@pytest.mark.parametrize("flag, value", [
+    ("--synthesize", "0"), ("--n-chunks", "0"), ("--max-chunks-per-run", "-1"),
+])
+def test_job_cli_refuses_counts_below_one(tmp_path, flag, value):
+    """A count below 1 exits with argparse's code 2 before Spark starts.
+    ``--synthesize 0`` once fell into the ``--input`` branch and read a
+    null path, ``--n-chunks 0`` wrote nothing and failed on the
+    checkpoint, and ``--max-chunks-per-run -1`` ran all chunks but the
+    last and reported success."""
+    counts = {"--synthesize": "5", "--n-chunks": "4", flag: value}
+    r = subprocess.run(
+        [sys.executable, "archvisier_spark/job.py",
+         "--output", str(tmp_path / "o"),
+         "--checkpoint", str(tmp_path / "c"),
+         *(arg for pair in counts.items() for arg in pair)],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert r.returncode == 2, r.stderr[-2000:]
+    assert flag in r.stderr
+    assert not (tmp_path / "o").exists()
 
 
 def test_job_cli_ocr_mode_raster_errors_stay_data(tmp_path):

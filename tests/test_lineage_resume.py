@@ -296,3 +296,17 @@ def test_resume_with_other_n_chunks_is_refused(spark, tmp_path):
     final = spark.read.parquet(out)
     assert final.count() == final.select("url").distinct().count() == 200
     assert {r["n_chunks"] for r in lineage_report(spark, ckpt).collect()} == {4}
+
+
+@pytest.mark.parametrize("counts", [
+    {"n_chunks": 0}, {"max_chunks_per_run": 0}, {"max_chunks_per_run": -1},
+], ids=["n_chunks_0", "max_chunks_0", "max_chunks_-1"])
+def test_counts_below_one_are_refused(spark, docs, tmp_path, counts):
+    """``max_chunks_per_run=-1`` once sliced ``todo[:-1]`` and ran all
+    chunks but the last, and ``n_chunks=0`` wrote nothing and then failed
+    on the missing checkpoint: both raise before anything is written."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="must be at least 1"):
+        run_resumable(spark, docs, str(out), str(tmp_path / "ckpt"),
+                      **{"n_chunks": N_CHUNKS, **counts})
+    assert not out.exists()
